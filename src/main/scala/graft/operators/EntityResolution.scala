@@ -151,13 +151,6 @@ object EntityResolution {
     */
   val DefaultPairBudget: Long = 200000000L
 
-  /** Σ C(n,2) over a block census — ONE aggregate over the
-    * (block, n) frame, nothing pair-sized; the wedgeSum device
-    * (Graph.scala) applied to ER blocking.
-    */
-  def blockPairCensus(keyed: DataFrame, blkCol: String): Long =
-    blockCensus(keyed, blkCol)._1
-
   /** (sum C(|block|,2), total records) off ONE block-sized aggregate
     * — the pair census the budget guard cuts on plus the record count
     * that sizes the broadcast decision below.

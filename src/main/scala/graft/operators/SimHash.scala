@@ -24,13 +24,6 @@ object SimHash {
   private def shr(c: Column, n: Column): Column = call_function("shiftright", c, n)
   private def shl(c: Column, n: Column): Column = call_function("shiftleft", c, n)
 
-  /** Bit i (0-based) of a token's 64-bit md5-digit hash, given the
-    * 32-char hex digest column — (digit[i/4] >> i%4) & 1.
-    */
-  private def md5Bit(hx: Column, i: Int): Column =
-    shiftright(conv(substring(hx, i / 4 + 1, 1), 16, 10).cast("long"), i % 4)
-      .bitwiseAND(lit(1L))
-
   /** 64-bit SimHash of a token array: bit i is set when
     * Σ_tokens (±1 by md5-digit bit i) > 0.
     *

@@ -23,8 +23,6 @@ object Similarity {
   def dotCol(a: Column, b: Column): Column =
     call_function("vec_dot", a, b)
 
-  def normCol(a: Column): Column = sqrt(dotCol(a, a))
-
   /** Fused single-pass cosine (graft.functions.VecCosine). */
   def cosineCol(a: Column, b: Column): Column =
     call_function("vec_cosine", a, b)

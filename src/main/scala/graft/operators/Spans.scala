@@ -45,12 +45,6 @@ object Spans {
     * per-row transform keeps gram building on the scan with zero
     * shuffles; the `size >= K` guard keeps `sequence` ascending.
     */
-  def spanPostings(spark: SparkSession, dir: String): DataFrame =
-    spanPostingsOf(Tables.documents(spark, dir))
-
-  /** Same gram build over any (doc_id, source, text) frame — lets
-    * specs drive hand-built corpora through the real code path.
-    */
   def spanPostingsOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val toks = Dedup.tokensCol($"text")

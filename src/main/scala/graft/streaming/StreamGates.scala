@@ -4,7 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.LongType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Driver-verifiable STREAMING gates (r13 verdict item 3): each gate
@@ -124,27 +124,18 @@ object StreamGates {
     }
   }
 
-  /** File-source twin of [[graft.Tables.events]]: same
-    * nanos/NTZ/timestamp normalization branch, applied to the
-    * streaming frame so both physical testdata layouts work.
+  /** File-source twin of [[graft.Tables.events]]: the streaming frame
+    * over `path` (a watch directory holding copies of `dir`'s events
+    * files) with the same ts normalization, so both physical testdata
+    * layouts work. The schema is the source table's, resolved through
+    * [[graft.Tables]] once per file set rather than once per gate call.
     */
-  private def eventsStream(spark: SparkSession, path: String,
+  private def eventsStream(spark: SparkSession, dir: String, path: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(path).schema
-    val reader = spark.readStream.schema(schema)
-    val df = maxFilesPerTrigger
+    val reader = spark.readStream.schema(Tables.eventsRaw(spark, dir).schema)
+    Tables.normalizedTs(maxFilesPerTrigger
       .fold(reader)(m => reader.option("maxFilesPerTrigger", m.toString))
-      .parquet(path)
-    schema("ts").dataType match {
-      case LongType =>
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _: TimestampNTZType =>
-        df.withColumn("ts", df("ts").cast(TimestampType))
-      case _: TimestampType => df
-      case other => throw new IllegalStateException(
-        s"events.ts: unsupported physical type $other")
-    }
+      .parquet(path))
   }
 
   /** The file source requires a DIRECTORY; driver testdata ships each
@@ -223,7 +214,7 @@ object StreamGates {
         $"c_nationkey".cast("long").as("nation"))
       .filter($"user_id" % 7 =!= 0)
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, watch)
+    val stream = eventsStream(spark, dir, watch)
       .select($"event_id", $"user_id")
     val enriched = EventStream.enrichWithDim(stream, dim, "user_id")
       .select($"event_id", $"segment", $"nation")
@@ -258,7 +249,7 @@ object StreamGates {
     val distinct = Tables.events(spark, dir)
       .select($"user_id").distinct().count()
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, watch)
+    val stream = eventsStream(spark, dir, watch)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[StreamEvent]
     val n = sinkName("hh")
@@ -301,7 +292,7 @@ object StreamGates {
     // far-future sentinel timestamps from the batch frame's max ts;
     // None on an empty table — no sentinels needed, output is empty
     val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, watch.toString,
+    val stream = eventsStream(spark, dir, watch.toString,
         maxFilesPerTrigger = Some(1))
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[StreamEvent]
@@ -369,7 +360,7 @@ object StreamGates {
     val spark = streamSession(spark0)
     import spark.implicits._
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, watch)
+    val stream = eventsStream(spark, dir, watch)
       .select($"ts", $"event_type", $"value")
     val n = sinkName("hrollup")
     drain(EventStream.hourlyRollup(stream)
@@ -392,7 +383,7 @@ object StreamGates {
     val spark = streamSession(spark0)
     import spark.implicits._
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, watch)
+    val stream = eventsStream(spark, dir, watch)
       .select($"ts", $"value")
     val n = sinkName("srollup")
     drain(EventStream.slidingRollup(stream)
@@ -427,7 +418,7 @@ object StreamGates {
     val watch = Files.createTempDirectory("sdau_stream_gate")
     copyTimeOrdered(spark, src, watch)
     val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, watch.toString,
+    val stream = eventsStream(spark, dir, watch.toString,
         maxFilesPerTrigger = Some(1))
       .select($"ts", $"user_id")
     val dau = EventStream.slidingDau(stream)
@@ -491,7 +482,7 @@ object StreamGates {
     val watch = Files.createTempDirectory("sdauhll_stream_gate")
     copyTimeOrdered(spark, src, watch)
     val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, watch.toString,
+    val stream = eventsStream(spark, dir, watch.toString,
         maxFilesPerTrigger = Some(1))
       .select($"ts", $"user_id")
     val est = EventStream.slidingDauHll(stream)
@@ -564,7 +555,7 @@ object StreamGates {
     val watch = Files.createTempDirectory("sess_stream_gate")
     copyTimeOrdered(spark, src, watch)
     val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, watch.toString,
+    val stream = eventsStream(spark, dir, watch.toString,
         maxFilesPerTrigger = Some(1))
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[StreamEvent]
@@ -617,7 +608,7 @@ object StreamGates {
     val spark = streamSession(spark0)
     import spark.implicits._
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, watch)
+    val stream = eventsStream(spark, dir, watch)
       .select($"ts")
     val n = sinkName("pgram")
     drain(EventStream.periodogram(stream)
@@ -640,7 +631,7 @@ object StreamGates {
     val spark = streamSession(spark0)
     import spark.implicits._
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    def side(t: String) = eventsStream(spark, watch)
+    def side(t: String) = eventsStream(spark, dir, watch)
       .filter($"event_type" === t)
       .select($"event_id", $"user_id", $"ts")
     val joined = EventStream.streamStreamJoin(side("click"), side("error"))
@@ -677,7 +668,7 @@ object StreamGates {
     val watch = Files.createTempDirectory("ssj_outer_gate")
     copyParquet(Paths.get(src), watch)
     val maxMicros = maxEventMicros(spark, dir)
-    def side(t: String) = eventsStream(spark, watch.toString)
+    def side(t: String) = eventsStream(spark, dir, watch.toString)
       .filter($"event_type".isin(t, "sentinel"))
       .select($"event_id", $"user_id", $"ts")
     val joined = EventStream.streamStreamJoinLeftOuter(
@@ -738,7 +729,7 @@ object StreamGates {
     val spark = streamSession(spark0)
     import spark.implicits._
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, watch)
+    val stream = eventsStream(spark, dir, watch)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
     val deduped = EventStream
       .dedupByKey(stream, Seq("user_id", "event_type"))
@@ -749,7 +740,7 @@ object StreamGates {
     // aggregation in update mode; consumer-side min collapses
     // re-emissions deterministically
     val n = sinkName("dedupmin")
-    drain(eventsStream(spark, watch)
+    drain(eventsStream(spark, dir, watch)
       .select($"user_id", $"event_type", $"event_id")
       .groupBy($"user_id", $"event_type")
       .agg(min($"event_id").as("min_event_id"))
@@ -796,7 +787,7 @@ object StreamGates {
     val spark = streamSession(spark0)
     import spark.implicits._
     val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, watch)
+    val stream = eventsStream(spark, dir, watch)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .as[StreamEvent]
     val alarms = EventStream
@@ -865,7 +856,7 @@ object StreamGates {
     val cp = Files.createTempDirectory("manifest_stream_cp")
     val table = new graft.pipeline.ManifestTable(spark,
       root.resolve("t").toString)
-    val stream = eventsStream(spark, watch.toString,
+    val stream = eventsStream(spark, dir, watch.toString,
         maxFilesPerTrigger = Some(1))
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
     drain(EventStream.intoManifestTable(stream, table, cp.toString).start())
@@ -924,7 +915,7 @@ object StreamGates {
       new graft.pipeline.ManifestTable(spark, root.resolve("mv").toString),
       groupCols = Seq("event_type"), sumCols = Seq("cents"))
     val modes = scala.collection.mutable.ArrayBuffer.empty[String]
-    val stream = eventsStream(spark, watch.toString,
+    val stream = eventsStream(spark, dir, watch.toString,
         maxFilesPerTrigger = Some(1))
       .select($"event_id", $"ts", $"user_id", $"event_type",
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
@@ -1011,8 +1002,7 @@ object StreamGates {
     val ranges = math.min(32L, math.max(math.max(1L, minRanges.toLong),
       (bytes + (32L << 20) - 1) / (32L << 20))).toInt
     if (ranges == 1 && dataFiles <= 1) { copyParquet(srcPath, watch); return }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(src)
+    val raw = Tables.parquet(spark, src)
     val staging = Files.createTempDirectory("stream_ranges")
     // range partition ids are ascending in ts; part file names are
     // ascending in partition id — rename preserves the order
@@ -1067,7 +1057,7 @@ object StreamGates {
     */
   private def addSentinel(spark: SparkSession, srcPath: String,
       watch: Path, id: Long, tsMicros: Long): Unit = {
-    val raw = spark.read.parquet(srcPath)
+    val raw = Tables.parquet(spark, srcPath)
     val tsType = raw.schema("ts").dataType
     val tsCol = tsType match {
       case LongType => lit(tsMicros * 1000L) // raw int64 nanos layout

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftinternal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The one sanctioned crossing into Spark's private[sql] surface:
   * building a DataFrame from a custom LogicalPlan node requires
@@ -16,6 +17,27 @@ object PlanBridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** The file relation a `spark.read.<format>(path)` frame scans, if
+    * its analyzed plan is exactly one.
+    */
+  def fileRelation(df: DataFrame): Option[LogicalRelation] =
+    df.queryExecution.analyzed match {
+      case lr @ LogicalRelation(_: HadoopFsRelation, _, None, false, None) =>
+        Some(lr)
+      case _ => None
+    }
+
+  /** A frame over an already-resolved file relation: no listing, no
+    * schema inference. The relation is re-bound to `spark` (the scan
+    * reads its session's conf) and gets fresh output attribute ids, so
+    * two such frames in one query stay distinguishable, exactly like
+    * two `spark.read` calls.
+    */
+  def ofFileRelation(spark: SparkSession, lr: LogicalRelation): DataFrame = {
+    val rel = lr.relation.asInstanceOf[HadoopFsRelation]
+    ofRows(spark, lr.copy(relation = rel.copy()(spark)).newInstance())
+  }
 
   /** Release the block-manager storage behind a `localCheckpoint`'d
     * frame NOW instead of waiting for the RDD to be GC'd and the

@@ -3,7 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graftinternal.PlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -52,6 +57,41 @@ class EventsSchemaSpec extends SparkSpec {
     assert(loadInstants(nanosDir) === expected)
     assert(loadInstants(ntzDir) === expected)
     assert(loadInstants(tsDir) === expected)
+  }
+
+  /** `events.parquet` as one file whose ts column is INT64
+    * TIMESTAMP(NANOS) — the layout Spark itself cannot write.
+    */
+  private def writeNanosFixture(): String = {
+    val dir = Files.createTempDirectory("graft_events_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(new Configuration()).build()
+    val rows = new SimpleGroupFactory(schema)
+    try microsEpochs.zipWithIndex.foreach { case (us, i) =>
+      w.write(rows.newGroup().append("event_id", i.toLong)
+        .append("ts", us * 1000L + 999L))
+    } finally w.close()
+    dir
+  }
+
+  test("a TIMESTAMP(NANOS) file loads to truncated µs instants under the shipped conf") {
+    val expected = microsEpochs.zipWithIndex.map { case (us, i) => (i.toLong, us) }
+    assert(loadInstants(writeNanosFixture()) === expected)
+  }
+
+  test("without the legacy nanos conf the TIMESTAMP(NANOS) layout raises a named error") {
+    val dir = writeNanosFixture()
+    val bare = PlanBridge.cloneSession(spark)
+    bare.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[Tables.EventsLayoutException](Tables.events(bare, dir))
+    assert(e.getMessage.contains("spark.sql.legacy.parquet.nanosAsLong"))
+    assert(bare.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "false",
+      "the loader must not change the caller's conf")
+    assert(loadInstants(dir).size === microsEpochs.size)
   }
 
   test("the live testdata layout loads and buckets by hour without error") {

@@ -13,14 +13,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.extensions", graft.functions.GraftExtensions.NAME)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+  /** Built through [[Graft.configure]], so specs run the config the
+    * library ships.
+    */
+  lazy val session: SparkSession = Graft.configure(
+      SparkSession.builder().master("local[4]"), 4, "graft-test")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
