@@ -44,4 +44,10 @@ object Graft {
       // a saveAsTable gate fail with LOCATION_ALREADY_EXISTS
       .config("spark.sql.warehouse.dir",
         graft.util.Scratch.dir("graft_warehouse"))
+      // file: without a child process per create, mkdirs and
+      // FileContext rename (graft.util.LocalFs); both Hadoop APIs
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.util.LocalFs.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.util.LocalFs.Context].getName)
 }
