@@ -11,9 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator extension: the native as-of join's planner
-    // strategy (custom LogicalPlan → custom SparkPlan)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectFunction((
       FunctionIdentifier("rolling_hash"),
       new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),

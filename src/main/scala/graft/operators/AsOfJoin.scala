@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,8 +34,7 @@ object AsOfJoin {
     val leftCols = left.columns.toSeq
     // SQL join semantics: a NULL key or NULL time never matches (the
     // window partition would otherwise group null keys together and
-    // hand them each other's payloads — caught by AsOfNativeSpec when
-    // the native operator disagreed with this composition)
+    // hand them each other's payloads)
     val rightNonNull = right.filter(
       (keys :+ rightTime).map(col(_).isNotNull).reduce(_ && _))
     val l = left.withColumn("_t", col(leftTime))
@@ -60,62 +59,6 @@ object AsOfJoin {
           .as(s"asof_$p")): _*)
       .filter($"_side" === 2)
       .drop("_side")
-  }
-
-  /** The NATIVE route to the same semantics: a custom LogicalPlan +
-    * SparkStrategy + SparkPlan (graft.plans.AsOfJoinPlan) registered
-    * via SparkSessionExtensions — one streamed merge per partition,
-    * one buffered right row, no union/window/side-tag machinery in
-    * the exchange. Same signature and same output contract as
-    * [[asOf]]; AsOfNativeSpec proves them row-identical and the
-    * `events_asof_native` gate proves the custom operator hash-exact
-    * against DuckDB's own ASOF JOIN.
-    */
-  def asOfNative(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTime: String, rightTime: String,
-      payload: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.graftinternal.PlanBridge
-    val lp = PlanBridge.analyzed(left)
-    // left and right often derive from the same base frame (the gate
-    // does exactly that), so their attributes share exprIds — the
-    // self-join problem Spark's own Join resolution dedups. Re-alias
-    // every right column to fresh exprIds before building the node.
-    val rp0 = PlanBridge.analyzed(right)
-    val fresh = rp0.output.map(a => Alias(a, a.name)())
-    val rp = Project(fresh, rp0)
-    val rOut = fresh.map(_.toAttribute)
-    def attr(out: Seq[Attribute], n: String): Attribute =
-      out.find(_.name == n).getOrElse(
-        sys.error(s"asOfNative: no column '$n' in ${out.map(_.name)}"))
-    val node = graft.plans.AsOfJoinNode(lp, rp,
-      keys.map(attr(lp.output, _)), keys.map(attr(rOut, _)),
-      attr(lp.output, leftTime), attr(rOut, rightTime),
-      payload.map(p => attr(rOut, p)),
-      payload.map { p =>
-        val a = attr(rOut, p)
-        AttributeReference(s"asof_$p", a.dataType, nullable = true)()
-      })
-    PlanBridge.ofRows(left.sparkSession, node)
-  }
-
-  /** Gate: the native-operator twin of [[eventsAsOfSignup]] — same
-    * projection, same DuckDB ASOF JOIN oracle, different engine path.
-    */
-  def eventsAsOfSignupNative(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = Tables.events(spark, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val probes = ev.filter($"event_type" =!= "signup")
-    val signups = ev.filter($"event_type" === "signup")
-      .select($"user_id", $"ts", $"event_id".as("signup_id"),
-        $"value".as("signup_value"))
-    asOfNative(probes, signups, keys = Seq("user_id"),
-      leftTime = "ts", rightTime = "ts",
-      payload = Seq("signup_id", "signup_value"))
-      .select($"event_id", $"user_id", $"asof_signup_id",
-        round($"asof_signup_value", 4).as("asof_signup_value"))
   }
 
   /** Gate query: each non-signup event annotated with the value of

@@ -220,9 +220,9 @@ object Graph {
     // sort-merge join's re-sort of the (already co-partitioned) edge
     // list every iteration (guide §3.1 — build the moderately-small
     // side per partition; measured 2.84 → 2.23 s for the 5-iteration
-    // loop body at sf0.1/local[32], LoopJoinProbe). The build side is
-    // node-scale, so per-partition hash tables stay small at any
-    // production partition count.
+    // loop body at sf0.1/local[32], OPTIMIZATION_r17.md "Batch 1").
+    // The build side is node-scale, so per-partition hash tables stay
+    // small at any production partition count.
     var ranks = deg.select($"src".as("node"), lit(1000000L).as("rank"))
     for (_ <- 1 to iters) {
       ranks = e.join(ranks.hint("shuffle_hash"), $"src" === $"node")
@@ -943,10 +943,10 @@ object Graph {
     // wedges → 102 M distinct pairs), so map-side partial aggregation
     // buys a 1.4× row cut while its per-map hash table holds the
     // whole near-distinct key set — measured 41 s vs 15 s for the
-    // shuffle-raw-longs-then-aggregate-once shape (WedgeProbe, sf0.1,
-    // 32 cores). Partition count scales with the measured wedge
-    // stream (≥ session parallelism, ~3 M wedges per task) instead of
-    // being a local constant.
+    // shuffle-raw-longs-then-aggregate-once shape (sf0.1, 32 cores;
+    // OPTIMIZATION_r16.md §1 "Graph family"). Partition count scales
+    // with the measured wedge stream (≥ session parallelism, ~3 M
+    // wedges per task) instead of being a local constant.
     val aggParts = math.max(spark.sessionState.conf.numShufflePartitions,
       math.min(4096L, wedges / 3000000L).toInt)
     val common = nb.select($"src", $"dst".as("a"))

@@ -1,37 +1,32 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Surrogate-key assignment. The reference does `range(1, n+1)` on the
-  * driver (task.py:100) — fine for 7,787 rows, fatal at 100 TB. Two
-  * distributed strategies:
+  * driver (task.py:100) — fine for 7,787 rows, fatal at 100 TB. Both
+  * strategies assign dense ids 1..N without a driver-side range or an
+  * all-to-one window:
   *
-  *  - [[ordered]]: `row_number` over a global sort. Deterministic and
-  *    oracle-reproducible, but funnels through one partition for the
-  *    window — reserve it for POST-AGGREGATION dimensions (vocab,
-  *    personnel) that are orders of magnitude smaller than the fact.
+  *  - [[orderedScalable]]: ids equal `row_number()` over a global sort
+  *    when the order column is unique — deterministic and
+  *    oracle-reproducible, with every stage parallel.
   *  - [[scalable]]: partition-offset `zipWithIndex` — one tiny O(P)
   *    count pass, then ids assigned partition-locally with no global
   *    shuffle. Ids are dense 1..N but ordering follows the incoming
-  *    partitioning; pair with a prior `repartitionByRange` when a
-  *    sorted id space is required.
+  *    partitioning.
   */
 object SurrogateKey {
 
-  def ordered(df: DataFrame, orderCol: String, idCol: String): DataFrame =
-    df.withColumn(idCol, row_number().over(Window.orderBy(col(orderCol))).cast(LongType))
-
-  /** Ordered ids WITHOUT the all-to-one window: range-repartition on
-    * the order column (partition i's keys all sort before partition
-    * i+1's), sort within partitions, then assign partition-offset
-    * indices. Output ≡ [[ordered]] whenever `orderCol` is unique
-    * (range boundaries only ever split BETWEEN key values, and
-    * zipWithIndex numbers partitions in ascending partition order),
-    * but every stage is parallel — use this in ETL paths where the
-    * dimension can be vocabulary-sized.
+  /** Ids equal `row_number()` over a global sort when the order column
+    * is unique: range-repartition on the order column (partition i's
+    * keys all sort before partition i+1's), sort within partitions,
+    * then assign partition-offset indices (range boundaries only ever
+    * split BETWEEN key values, and zipWithIndex numbers partitions in
+    * ascending partition order). No stage funnels through one
+    * partition — use this in ETL paths where the dimension can be
+    * vocabulary-sized.
     */
   def orderedScalable(df: DataFrame, orderCol: String, idCol: String): DataFrame =
     scalable(

@@ -442,9 +442,9 @@ object EventStream {
   }
 
   /** #41h streaming as-of enrichment — the streaming twin of
-    * [[graft.operators.AsOfJoin.asOf]] (and of the native
-    * AsOfJoinExec): each probe event is matched to the latest
-    * same-user `signup` at-or-before its event time. Correctness
+    * [[graft.operators.AsOfJoin.asOf]]: each probe event is matched
+    * to the latest same-user `signup` at-or-before its event time.
+    * Correctness
     * under out-of-order arrival comes from the WATERMARK: a probe is
     * held in state until the watermark passes its event time — at
     * that point any still-missing earlier reference would be

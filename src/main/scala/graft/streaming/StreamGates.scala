@@ -41,28 +41,18 @@ object StreamGates {
     * is a few thousand rows. Measured at sf0.1/local[32]:
     * stream_join_left_outer 38 s → 7-8 s with 2-8 state partitions
     * (flat across 2/4/8 — the cost is the store count, not the data).
-    * This is the streaming sizing knob the guide's §2 "partitioning
-    * must be scale-adaptive" rule names: it tracks STREAM VOLUME per
-    * trigger, not cluster cores. SPARK_GRAFT_STREAM_SHUFFLE overrides
-    * for production (size so per-batch per-partition state stays in
-    * the store's comfort zone); the child session isolates the
-    * setting from the shared batch session driving everything else.
+    * So the count is a constant 8, sized to the stream volume per
+    * trigger rather than to cluster cores. The child session isolates
+    * the setting from the shared batch session driving everything else.
     */
   private def streamSession(spark0: SparkSession): SparkSession = {
     // cloneSession, not newSession: the clone inherits the parent's
     // RUNTIME conf (a probe/bench harness toggling e.g. AQE
     // coalescing after session creation must see its setting apply
     // to the streaming gates too — newSession silently reverted to
-    // builder-time defaults). The env knob is validated loudly: a
-    // malformed value must name itself, not surface as a bare
-    // NumberFormatException from every gate.
-    val raw = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    val n = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got '$raw'"))
-    require(n > 0,
-      s"SPARK_GRAFT_STREAM_SHUFFLE must be a positive integer, got '$raw'")
+    // builder-time defaults)
     val s = org.apache.spark.sql.graftinternal.PlanBridge.cloneSession(spark0)
-    s.conf.set("spark.sql.shuffle.partitions", n)
+    s.conf.set("spark.sql.shuffle.partitions", 8)
     s
   }
 

@@ -1,23 +1,17 @@
 package org.apache.spark.sql.graftinternal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** The one sanctioned crossing into Spark's private[sql] surface:
-  * building a DataFrame from a custom LogicalPlan node requires
-  * `Dataset.ofRows`, which extension libraries reach exactly this
-  * way (a bridge object under org.apache.spark.sql — the same trick
-  * every published Spark connector/extension uses). Nothing else in
-  * graft touches non-public API.
+/** The one sanctioned crossing into Spark's private[sql] surface, a
+  * bridge object under org.apache.spark.sql (the same trick every
+  * published Spark connector/extension uses). `Dataset.ofRows` is
+  * reached only by [[ofFileRelation]]; the other members read
+  * `queryExecution` or clone a session. Nothing else in graft touches
+  * non-public API.
   */
 object PlanBridge {
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
-
   /** The file relation a `spark.read.<format>(path)` frame scans, if
     * its analyzed plan is exactly one.
     */
@@ -36,7 +30,8 @@ object PlanBridge {
     */
   def ofFileRelation(spark: SparkSession, lr: LogicalRelation): DataFrame = {
     val rel = lr.relation.asInstanceOf[HadoopFsRelation]
-    ofRows(spark, lr.copy(relation = rel.copy()(spark)).newInstance())
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      lr.copy(relation = rel.copy()(spark)).newInstance())
   }
 
   /** Release the block-manager storage behind a `localCheckpoint`'d

@@ -3,10 +3,104 @@ package graft
 import java.sql.Timestamp
 
 import graft.operators.AsOfJoin
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.expr
 
 class AsOfJoinSpec extends SparkSpec {
 
   private def ts(m: Long) = new Timestamp(1704067200000L + m * 60000L)
+
+  /** asOf over left (id, k, t) and right (k, rt, v), as (id, asof_v)
+    * sorted by id.
+    */
+  private def asOfV(left: DataFrame, right: DataFrame): Seq[(Long, Option[Long])] =
+    AsOfJoin.asOf(left, right, Seq("k"), "t", "rt", Seq("v"))
+      .orderBy("id").collect().toSeq.map(x =>
+        (x.getLong(0), if (x.isNullAt(3)) None else Some(x.getLong(3))))
+
+  /** Independent reference: for each left (id, key, t), the payload of
+    * the right row with equal key and the greatest rt ≤ t, ties on rt
+    * broken by the greatest payload; a null key or time never matches.
+    */
+  private def reference[P](left: Seq[(Long, Option[Long], Option[Long])],
+      right: Seq[(Option[Long], Option[Long], P)])(
+      implicit ord: Ordering[P]): Map[Long, Option[P]] =
+    left.map { case (id, k, t) =>
+      var best: Option[(Long, P)] = None
+      for ((rk, rt, v) <- right)
+        if (k.isDefined && t.isDefined && rk == k && rt.exists(_ <= t.get) &&
+            best.forall { case (bt, bv) =>
+              rt.get > bt || (rt.get == bt && ord.gt(v, bv)) })
+          best = Some((rt.get, v))
+      id -> best.map(_._2)
+    }.toMap
+
+  test("as-of on crafted edge shapes: ties, misses, unprobed keys") {
+    import spark.implicits._
+    val left = Seq(
+      (1L, 10L, 100L),  // match at equal time
+      (2L, 10L, 150L),  // latest of several
+      (3L, 10L, 99L),   // before any right row -> null
+      (4L, 20L, 500L),  // key with no right rows -> null
+      (5L, 30L, 300L),  // tie: two right rows same (k, rt)
+      (6L, 40L, 1L)     // right side has keys the left never probes
+    ).toDF("id", "k", "t")
+    val right = Seq(
+      (10L, 100L, 11L), (10L, 120L, 12L), (10L, 140L, 13L),
+      (30L, 300L, 31L), (30L, 300L, 32L), // same time: greatest payload
+      (35L, 1L, 99L),                     // unprobed key
+      (40L, 5L, 41L)                      // after left's t=1 -> null
+    ).toDF("k", "rt", "v")
+    assert(asOfV(left, right) == Seq(1L -> Some(11L), 2L -> Some(13L),
+      3L -> None, 4L -> None, 5L -> Some(32L), 6L -> None))
+  }
+
+  test("as-of: null keys and null times never match, on either side") {
+    import spark.implicits._
+    val left = Seq(
+      (1L, Some(10L), Some(100L)), (2L, None, Some(100L)),
+      (3L, Some(10L), None)
+    ).toDF("id", "k", "t")
+    val right = Seq(
+      (Some(10L), Some(50L), 1L), (None, Some(40L), 2L),
+      (Some(10L), None, 3L)
+    ).toDF("k", "rt", "v")
+    assert(asOfV(left, right) ==
+      Seq(1L -> Some(1L), 2L -> None, 3L -> None))
+  }
+
+  test("as-of ≡ reference on a randomized 500×300 stream") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    val l = (1 to 500).map(i =>
+      (i.toLong, rnd.nextInt(12).toLong, rnd.nextInt(1000).toLong))
+    val r = (1 to 300).map(i =>
+      (rnd.nextInt(16).toLong, rnd.nextInt(1000).toLong, i.toLong))
+    val got = asOfV(l.toDF("id", "k", "t").repartition(7),
+      r.toDF("k", "rt", "v").repartition(5))
+    val want = reference(l.map { case (id, k, t) => (id, Some(k), Some(t)) },
+      r.map { case (k, rt, v) => (Some(k), Some(rt), v) })
+    assert(got.length == l.length && got.toMap == want)
+  }
+
+  test("events_asof_signup ≡ reference on real events") {
+    import spark.implicits._
+    val ev = Tables.events(spark, SF)
+      .select($"event_id", $"user_id", expr("unix_micros(ts)").as("tus"),
+        $"event_type", $"value")
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getString(3), r.getDouble(4)))
+    val probes = ev.filter(_._4 != "signup")
+    val signups = ev.filter(_._4 == "signup")
+    val want = reference(probes.map(e => (e._1, Some(e._2), Some(e._3))),
+      signups.map(e => (Some(e._2), Some(e._3), (e._1, e._5))))
+    val got = AsOfJoin.eventsAsOfSignup(spark, SF).collect().map(r =>
+      r.getLong(0) -> (if (r.isNullAt(2)) None
+        else Some((r.getLong(2), r.getDouble(3))))).toMap
+    val rounded = want.map { case (id, p) => id -> p.map { case (sid, v) =>
+      (sid, BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble) } }
+    assert(got.size == probes.length && got == rounded)
+  }
 
   test("as-of picks the latest right row ≤ t, null when none precedes") {
     import spark.implicits._

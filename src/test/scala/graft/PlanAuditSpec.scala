@@ -506,13 +506,6 @@ class PlanAuditSpec extends SparkSpec {
       s"histogram range join not broadcast:\n$p")
   }
 
-  test("events_asof_native plans the custom exec with no window state") {
-    val p = plan("events_asof_native")
-    assert(p.contains("AsOfJoin "), s"custom exec missing:\n$p")
-    assert(!p.contains("Window"), s"native path must carry no window:\n$p")
-  }
-
-
   test("sim_dbscan: pair frame is a broadcast nested-loop, never a cartesian shuffle") {
     // the clustering core truncates lineage at a checkpoint, so pin
     // the pair stage (the scale-critical part) directly
