@@ -90,14 +90,14 @@ class EntryConsistencySpec extends SparkSpec {
     * this spec is the sbt-test-time tripwire.
     */
   test("integer-typed gate columns carry a CAST over any oracle sum (HUGEINT lint)") {
-    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
-      case (name, sql) =>
-        val intCols = SparkEntry.queries(name)(spark, SF).schema.fields
-          .collect { case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.LongType]
-            || f.dataType.isInstanceOf[org.apache.spark.sql.types.IntegerType] => f.name }
-        intCols.flatMap { c =>
-          OracleLint.uncastSumDefinition(sql, c).map(expr => s"$name.$c = $expr")
-        }
+    val bad = gatesWithInputs(SparkEntry.oracleSql.keys.toSeq.sorted).flatMap { name =>
+      val intCols = SparkEntry.queries(name)(spark, SF).schema.fields
+        .collect { case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.LongType]
+          || f.dataType.isInstanceOf[org.apache.spark.sql.types.IntegerType] => f.name }
+      intCols.flatMap { c =>
+        OracleLint.uncastSumDefinition(SparkEntry.oracleSql(name), c)
+          .map(expr => s"$name.$c = $expr")
+      }
     }
     assert(bad.isEmpty,
       s"uncast integer sums reaching gate output (HUGEINT class):\n${bad.mkString("\n")}")

@@ -1,22 +1,30 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import graft.pipeline.NetflixEtl
 import org.apache.spark.sql.functions._
 
 /** The reference pipeline run end-to-end on the reference's OWN
   * dataset, asserting its own test contract (task.py:248-273):
   * extract = 7,787×12, transformed shows = 7,787×9, star tables
-  * non-empty and referentially sound.
+  * non-empty and referentially sound. The cases that read the CSV
+  * cancel on a host without it; they run unchanged wherever it is.
   */
 class NetflixEtlSpec extends SparkSpec {
 
-  private val CSV = "/root/reference/netflix_titles.csv"
+  private val CSV = NetflixEtl.referenceCsv
+
+  private def assumeCsv(): Unit =
+    assume(Files.isRegularFile(Paths.get(CSV)),
+      s"$CSV absent: reference dataset not on this host")
 
   private lazy val star =
     NetflixEtl.runAndLoad(spark, CSV,
-      java.nio.file.Files.createTempDirectory("netflix_lake").toString)
+      Files.createTempDirectory("netflix_lake").toString)
 
   test("extract: 7,787 shows × 12 columns (test_extract, task.py:254)") {
+    assumeCsv()
     val shows = NetflixEtl.extract(spark, CSV)
     assert(shows.columns.length == 12)
     assert(shows.count() == 7787)
@@ -27,11 +35,13 @@ class NetflixEtlSpec extends SparkSpec {
   }
 
   test("transform: shows keep 7,787 rows × 9 columns (test_transform, task.py:259)") {
+    assumeCsv()
     assert(star.shows.columns.length == 9)
     assert(star.shows.count() == 7787)
   }
 
   test("personnel / movie_crew / listings are non-empty and consistent") {
+    assumeCsv()
     import spark.implicits._
     val nPersonnel = star.personnel.count()
     assert(nPersonnel > 0)
@@ -53,6 +63,7 @@ class NetflixEtlSpec extends SparkSpec {
   }
 
   test("gender enrichment matches the reference's category mapping shape") {
+    assumeCsv()
     import spark.implicits._
     val genders = star.personnel.select($"gender").distinct()
       .collect().map(_.getString(0)).toSet

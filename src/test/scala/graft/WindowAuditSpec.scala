@@ -211,7 +211,7 @@ class WindowAuditSpec extends SparkSpec {
   test("no gate query has an unpartitioned window outside the exempt set") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { q =>
+      val offenders = gatesWithInputs(SparkEntry.queries.keys.toSeq.sorted).flatMap { q =>
         val n = SparkEntry.queries(q)(spark, SF)
           .queryExecution.executedPlan.collect {
             case w: WindowExec if w.partitionSpec.isEmpty => w
@@ -275,7 +275,7 @@ class WindowAuditSpec extends SparkSpec {
   test("no gate query runs a corpus-sized window partitioned by a low-cardinality key") {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { q =>
+      val offenders = gatesWithInputs(SparkEntry.queries.keys.toSeq.sorted).flatMap { q =>
         val n = lowCardOffenders(SparkEntry.queries(q)(spark, SF)
           .queryExecution.executedPlan).length
         if (n > 0) Some(q -> n) else None
