@@ -1,9 +1,124 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftinternal.PlanBridge
+
 /** Driver-run benchmark: times every SparkEntry query at
-  * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
+  * SPARK_GRAFT_SF_DIR on [[Graft.session]] exactly as it ships, min of
+  * 3 passes in one JVM. One bounded JSON line on stdout; the per-gate
+  * rows go to target/bench_summary.json and boards/bench_latest.json.
   */
 object Bench {
+  type Gate = (SparkSession, String) => DataFrame
+
+  /** One run of one gate.
+    * @param sec        wall of `fn(spark, sfDir).count()`; -1 when the
+    *                   gate threw
+    * @param loadBefore 1-min host loadavg at the gate's start
+    * @param loadAfter  1-min host loadavg at its end
+    * @param leftRdds   RDDs the gate left persisted (not in the
+    *                   pre-gate snapshot); released after the row is taken
+    * @param leftBytes  their memory + disk bytes
+    * @param jobs       Spark jobs that started while the gate ran
+    * @param stages     their completed stages
+    * @param taskSec    executor run time summed over those stages
+    * @param jobWallSec submit-to-end wall summed over those jobs
+    */
+  final case class Row(sec: Double, loadBefore: Double, loadAfter: Double,
+      leftRdds: Int, leftBytes: Long, jobs: Int, stages: Int,
+      taskSec: Double, jobWallSec: Double)
+
+  /** Credits each job that starts while a gate is open to that gate
+    * (gates run serially), streaming micro-batch jobs included.
+    */
+  final class JobMeter extends SparkListener {
+    @volatile private var since = Long.MaxValue
+    private val started = mutable.HashMap.empty[Int, Long]
+    private val stageJob = mutable.HashMap.empty[Int, Int]
+    private var stages = 0
+    private var taskMs = 0L
+    private var wallMs = 0L
+
+    def open(): Unit = synchronized {
+      started.clear(); stageJob.clear()
+      stages = 0; taskMs = 0L; wallMs = 0L
+      since = System.currentTimeMillis()
+    }
+
+    /** (jobs, stages, task s, job wall s) since [[open]]; read it once
+      * the listener bus has drained.
+      */
+    def close(): (Int, Int, Double, Double) = synchronized {
+      since = Long.MaxValue
+      (started.size, stages, taskMs / 1e3, wallMs / 1e3)
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (e.time >= since) {
+        started(e.jobId) = e.time
+        e.stageIds.foreach(stageJob(_) = e.jobId)
+      }
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      started.get(e.jobId).foreach(t => wallMs += e.time - t)
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      if (stageJob.contains(e.stageInfo.stageId)) {
+        stages += 1
+        taskMs += e.stageInfo.taskMetrics.executorRunTime
+      }
+    }
+  }
+
+  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+
+  /** Times `fn(spark, sfDir).count()` alone. Outside the timed region
+    * it reads the gate's jobs off `meter` (registered on `spark`), then
+    * records and releases every RDD the gate left persisted, so the
+    * next gate starts from the same storage state.
+    */
+  def runGate(spark: SparkSession, sfDir: String, fn: Gate, meter: JobMeter): Row = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val loadBefore = osBean.getSystemLoadAverage
+    meter.open()
+    val t0 = System.nanoTime()
+    // a failed gate records -1, never its elapsed-to-failure time: a
+    // breakage must not masquerade as a fast result
+    val sec = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      catch { case _: Throwable => -1.0 }
+    val loadAfter = osBean.getSystemLoadAverage
+    // job ends and storage sizes reach the driver through the bus
+    PlanBridge.drainListeners(sc)
+    val (jobs, stages, taskSec, jobWallSec) = meter.close()
+    val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    val leftBytes = sc.getRDDStorageInfo.filter(i => left.contains(i.id))
+      .map(i => i.memSize + i.diskSize).sum
+    spark.catalog.clearCache()
+    left.values.foreach(_.unpersist(blocking = true))
+    Row(sec, loadBefore, loadAfter, left.size, leftBytes, jobs, stages,
+      taskSec, jobWallSec)
+  }
+
+  // 4 decimals (0.1 ms) — full double precision would waste ~10
+  // chars/query against the harvester's bounded tail capture
+  private def fmt(v: Double): String =
+    if (v < 0) "-1" else BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+  private def fmt1(v: Double): String =
+    if (v < 0) "-1" else BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** A gate's row in the summary files: what it left and its jobs. */
+  def rowJson(r: Row): String =
+    s"""{"left_rdds":${r.leftRdds},"left_bytes":${r.leftBytes},""" +
+      s""""jobs":${r.jobs},"stages":${r.stages},"task_s":${fmt(r.taskSec)},""" +
+      s""""job_wall_s":${fmt(r.jobWallSec)}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -11,11 +126,6 @@ object Bench {
     val spark = Graft.session(master = s"local[$cpus]",
       shufflePartitions = cpus.toInt, appName = "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
-    // local[N] at test SFs is CPU-bound on byte-tiny shuffles (pair
-    // enumeration, 64-agg signatures) — AQE's size-based coalescing
-    // collapses those to 1 partition and serializes them. On a real
-    // cluster with IO-bound shuffles, leave it on (Graft default).
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     // Scale-up runs: at sub-GB SFs the default 128MB split target +
     // 4MB open cost packs whole tables into 2-4 scan partitions, so
     // wall time measures split packing, not the operator. On a real
@@ -25,248 +135,25 @@ object Bench {
       spark.conf.set("spark.sql.files.maxPartitionBytes", v)
       spark.conf.set("spark.sql.files.openCostInBytes", "1m")
     }
+    val gates = SparkEntry.selectedQueries
+    val names = gates.keys.toSeq
+    val meter = new JobMeter
+    spark.sparkContext.addSparkListener(meter)
     // min over three passes: pass 1 absorbs JVM/codegen/parquet-
-    // footer warmup, the min over passes 2-3 shrugs off GC and
-    // scheduler noise
-    // a failed query records -1, never its elapsed-to-failure time —
-    // a breakage must not masquerade as a fast result
-    // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (local
-    // iteration aid; driver leaves it unset → full suite). Unknown
-    // names fail fast — a typo must not produce a silently-empty run
-    // that looks green.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.contains(n))
-    }
-    // Per-FAMILY JVM isolation (r12 verdict item 4, warm-pass form
-    // per r13 item 2): two rounds running, one wedge gate's driver
-    // min landed ~2× the builder's isolated receipts — same-JVM
-    // heap/GC history from the 150+ preceding gates is the suspect
-    // the loadavg column can't fully retire. Gates matching
-    // SPARK_GRAFT_FORK_FAMILIES (prefix list; default the graph
-    // family) run in ONE fresh child JVM: same classpath
-    // (run/fork:=true makes java.class.path real), same JVM flags,
-    // child session startup NOT booked into any gate. The child runs
-    // the SAME 3-pass protocol internally — r13's one-cold-child-per-
-    // pass design made every forked pass pay JVM/codegen/parquet-
-    // footer warmup, so the reported "min" was a cold number (driver
-    // 40.0 s vs ~31 s warm isolated on graph_adamic_adar); with the
-    // passes inside one child, pass 1 absorbs warmup and the min over
-    // passes 2-3 is warm AND isolated. Child protocol:
-    // SPARK_GRAFT_CHILD_OUT=<file> makes this main run the 3 passes
-    // over SPARK_GRAFT_ONLY and write
-    // {"gate":[[sec,loadB,loadA],[...],[...]],...} to the file
-    // instead of the summary. A failed child falls back to in-process
-    // timing — a broken fork env must degrade to r12 behavior, not
-    // zero the family.
-    val childOut = sys.env.get("SPARK_GRAFT_CHILD_OUT")
-    val forkPrefixes = sys.env.getOrElse("SPARK_GRAFT_FORK_FAMILIES", "graph_")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val (forkGates, inprocGates) =
-      if (childOut.isDefined || forkPrefixes.isEmpty)
-        (Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame], selected)
-      else selected.partition { case (n, _) => forkPrefixes.exists(n.startsWith) }
-    // Heap hygiene between gates: gate-internal localCheckpoints
-    // leave block-manager entries alive until their RDD objects are
-    // GC'd and ContextCleaner processes the weak refs — across 150+
-    // gates × 3 passes that lag accumulates into storage-memory
-    // pressure that lands on whichever heavy gate runs next (the
-    // r10 driver board showed exactly that shape: heavy graph gates
-    // 2-3× their isolated receipts with wild spread). A periodic
-    // System.gc() lets the cleaner drain; every 25 gates costs ~1s
-    // per pass total, noise next to a 150+s board.
-    val gcEvery = sys.env.get("SPARK_GRAFT_GC_EVERY").map(_.toInt).getOrElse(25)
-    // The r10→r11 driver-vs-builder residual on the wedge family
-    // attributed to co-resident load + storage-memory pressure at
-    // harvest time (SCALING.md r11 attribution experiment). Two
-    // pieces of armor, per r11 verdict item 2:
-    //  (a) pre-gate GC isolation for the heavy wedge/sketch gates, so
-    //      whatever block-manager lag the preceding 100+ gates left
-    //      behind is drained BEFORE the clock starts, not during;
-    //  (b) host-load telemetry — 1-min loadavg sampled at every
-    //      gate's start and end, carried into bench_summary — so a
-    //      future driver/builder gap self-attributes from the
-    //      artifact instead of needing a reproduction experiment.
-    val isolate: Set[String] = sys.env.get("SPARK_GRAFT_GC_BEFORE")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set("graph_neighbor_jaccard", "graph_adamic_adar",
-        "graph_neighbor_jaccard_sketch", "graph_adamic_adar_sketch",
-        "graph_triangles", "graph_clustering", "graph_ktruss",
-        "graph_betweenness"))
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    def loadAvg(): Double = osBean.getSystemLoadAverage
-    final case class Timing(sec: Double, loadBefore: Double, loadAfter: Double)
-    def timeAll(gates: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]): Map[String, Timing] = {
-      var i = 0
-      gates.map { case (name, fn) =>
-        if (isolate.contains(name)) { spark.catalog.clearCache(); System.gc() }
-        val lb = loadAvg()
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        i += 1
-        if (gcEvery > 0 && i % gcEvery == 0) System.gc()
-        name -> Timing(if (ok) (System.nanoTime() - t0) / 1e9 else -1.0,
-          lb, loadAvg())
-      }
-    }
-    // Per-pass child telemetry (r14 verdict item 6): the warm child's
-    // pass-MAX showed fat tails (graph_adamic_adar [31, 46, 120])
-    // even with clearCache+gc between passes — before anyone reads
-    // the med/max columns as signal, the child self-reports per-pass
-    // RSS and GC time/count deltas so the tail attributes from the
-    // artifact (GC pressure vs page cache vs co-resident load).
-    def rssMb(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/self/status")
-        try src.getLines().collectFirst {
-          case l if l.startsWith("VmRSS:") =>
-            l.split("\\s+")(1).toLong / 1024
-        }.getOrElse(-1L) finally src.close()
-      } catch { case _: Throwable => -1L }
-    def gcTotals(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val beans = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala
-      (beans.map(_.getCollectionTime).sum, beans.map(_.getCollectionCount).sum)
-    }
-    // ── child mode: 3 warm passes, write, exit ────────────────────
-    childOut.foreach { outPath =>
-      final case class PassDiag(sec: Double, rssMb: Long, gcSec: Double,
-        gcN: Long)
-      val diags = Seq.newBuilder[PassDiag]
-      def childPass(): Map[String, Timing] = {
-        val (gcMs0, gcN0) = gcTotals()
-        val t0 = System.nanoTime()
-        val r = timeAll(selected)
-        spark.catalog.clearCache()
-        System.gc()
-        val (gcMs1, gcN1) = gcTotals()
-        diags += PassDiag((System.nanoTime() - t0) / 1e9, rssMb(),
-          (gcMs1 - gcMs0) / 1e3, gcN1 - gcN0)
-        r
-      }
-      val ps = Seq(childPass(), childPass(), childPass())
-      def f(v: Double) = if (v < 0) "-1" else BigDecimal(v)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-      val ds = diags.result()
-      // diag rides under a key whose VALUE is an object, so the
-      // parent's per-gate triple regex cannot mistake it for a gate
-      val diagJson = "\"__pass_diag\":{" +
-        "\"pass_sec\":[" + ds.map(d => f(d.sec)).mkString(",") + "]," +
-        "\"rss_mb\":[" + ds.map(_.rssMb.toString).mkString(",") + "]," +
-        "\"gc_sec\":[" + ds.map(d => f(d.gcSec)).mkString(",") + "]," +
-        "\"gc_n\":[" + ds.map(_.gcN.toString).mkString(",") + "]}"
-      val json = (selected.keys.map { k =>
-        s"\"" + k + "\":[" + ps.map { p =>
-          val t = p(k)
-          Seq(t.sec, t.loadBefore, t.loadAfter).map(f).mkString("[", ",", "]")
-        }.mkString(",") + "]"
-      }.toSeq :+ diagJson).mkString("{", ",", "}")
-      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      spark.stop()
-      sys.exit(0)
-    }
-    val ChildRow =
-      (""""([A-Za-z0-9_]+)":\[\[(-?[0-9.]+),(-?[0-9.]+),(-?[0-9.]+)\],""" +
-        """\[(-?[0-9.]+),(-?[0-9.]+),(-?[0-9.]+)\],""" +
-        """\[(-?[0-9.]+),(-?[0-9.]+),(-?[0-9.]+)\]\]""").r
-    // One child total, 3 warm passes inside it; returns gate -> the 3
-    // per-pass timings so the parent's min/spread/load logic sees the
-    // same shape as its own passes.
-    var forkDiag: Option[String] = None
-    def forkOnce(): Map[String, Seq[Timing]] = {
-      if (forkGates.isEmpty) return Map.empty
-      val out = java.nio.file.Files.createTempFile("bench_child_", ".json")
-      val log = java.nio.file.Files.createTempFile("bench_child_", ".log")
-      import scala.jdk.CollectionConverters._
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.filter(a =>
-          a == "--add-opens" || a.endsWith("=ALL-UNNAMED") ||
-            a.startsWith("-Xmx") || a.startsWith("-Xms") ||
-            a.startsWith("-D")).toSeq
-      // SPARK_GRAFT_CHILD_GCLOG=1: unified GC logging in the child —
-      // the r14 pass-max diagnosis instrument; path lands on stderr
-      val gcArgs = sys.env.get("SPARK_GRAFT_CHILD_GCLOG").toSeq.flatMap { _ =>
-        val gclog = java.nio.file.Files.createTempFile("bench_child_gc_", ".log")
-        System.err.println(s"bench: child GC log at $gclog")
-        Seq(s"-Xlog:gc*:file=$gclog:time,uptime")
-      }
-      val javaBin = new java.io.File(
-        new java.io.File(sys.props("java.home"), "bin"), "java").getPath
-      val cmd = Seq(javaBin) ++ jvmArgs ++ gcArgs ++
-        Seq("-cp", System.getProperty("java.class.path"), "graft.Bench")
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.environment().put("SPARK_GRAFT_ONLY", forkGates.keys.mkString(","))
-      pb.environment().put("SPARK_GRAFT_CHILD_OUT", out.toString)
-      pb.redirectOutput(ProcessBuilder.Redirect.to(log.toFile))
-      pb.redirectErrorStream(true)
-      val ok = try pb.start().waitFor() == 0 catch { case _: Throwable => false }
-      val childJson =
-        if (!ok) ""
-        else new String(java.nio.file.Files.readAllBytes(out),
-          java.nio.charset.StandardCharsets.UTF_8)
-      forkDiag = """"__pass_diag":(\{[^}]*\})""".r
-        .findFirstMatchIn(childJson).map(_.group(1))
-      val parsed: Map[String, Seq[Timing]] =
-        if (!ok) Map.empty
-        else ChildRow.findAllMatchIn(childJson)
-          .map { m =>
-            m.group(1) -> Seq(
-              Timing(m.group(2).toDouble, m.group(3).toDouble, m.group(4).toDouble),
-              Timing(m.group(5).toDouble, m.group(6).toDouble, m.group(7).toDouble),
-              Timing(m.group(8).toDouble, m.group(9).toDouble, m.group(10).toDouble))
-          }.toMap
-      if (parsed.keySet == forkGates.keySet) parsed
-      else {
-        // fork env broke (missing java, bad classpath, child OOM):
-        // degrade to in-process 3-pass timing, note on stderr
-        System.err.println(
-          s"bench: family fork failed (log: $log) — timing " +
-            s"${forkGates.size} gates in-process instead")
-        Map.empty
-      }
-    }
-    def pass(gates: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]): Map[String, Timing] = {
-      val r = timeAll(gates)
-      // plan-keyed cache entries a gate failed to release must not
-      // ride into the next pass
-      spark.catalog.clearCache()
-      System.gc()
-      r
-    }
-    val forked = forkOnce()
-    // fork fallback: any fork gate the child did not cover is timed
-    // in-process alongside the rest
-    val inprocAll = inprocGates ++ forkGates.filter { case (k, _) => !forked.contains(k) }
-    val inprocPasses = Seq(pass(inprocAll), pass(inprocAll), pass(inprocAll))
-    val timedPasses = inprocPasses.zipWithIndex.map { case (p, i) =>
-      p ++ forked.map { case (k, ts) => k -> ts(i) }
-    }
-    val passes = timedPasses.map(_.map { case (k, t) => k -> t.sec })
-    val results = passes.head.keys.map { k =>
-      val ts = passes.map(_(k)).filter(_ >= 0)
-      k -> (if (ts.nonEmpty) ts.min else -1.0)
+    // footer warmup, the min over passes 2-3 shrugs off scheduler noise
+    val passes = Seq.fill(3)(gates.map { case (n, fn) => n -> runGate(spark, sfDir, fn, meter) })
+    // per gate, the row of the pass that produced its min
+    val best = names.map { k =>
+      k -> passes.map(_(k)).filter(_.sec >= 0).minByOption(_.sec)
     }.toMap
-    // 4 decimals (0.1 ms) — full double precision would waste ~10
-    // chars/query against the harvester's bounded tail capture
-    def fmt(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    val results = names.map(k => k -> best(k).fold(-1.0)(_.sec)).toMap
+    val qs = names.map(k => s"\"" + k + "\":" + fmt(results(k))).mkString("{", ",", "}")
     // per-query [min, median, max] over the 3 passes, so a reader can
     // tell an engineering regression from run-to-run variance (at
     // sf0.1 a ±15% swing on a sub-second query is pure noise; the
     // spread makes that visible instead of arguable)
-    val spread = passes.head.keys.map { k =>
-      val ts = passes.map(_(k)).filter(_ >= 0).sorted
+    val spread = names.map { k =>
+      val ts = passes.map(_(k).sec).filter(_ >= 0).sorted
       val s = if (ts.isEmpty) Seq(-1.0, -1.0, -1.0)
         else Seq(ts.min, ts(ts.size / 2), ts.max)
       s"\"" + k + "\":[" + s.map(fmt).mkString(",") + "]"
@@ -274,14 +161,14 @@ object Bench {
     // host-load column: per gate, the [before, after] 1-min loadavg
     // of the pass that produced the reported min — a min harvested at
     // loadavg 60 on a 32-cpu box reads as crowded, one at 8 as clean
-    def fmt1(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
-    val loads = timedPasses.head.keys.map { k =>
-      val best = timedPasses.map(_(k)).filter(_.sec >= 0)
-        .sortBy(_.sec).headOption
-      val s = best.map(t => Seq(t.loadBefore, t.loadAfter))
-        .getOrElse(Seq(-1.0, -1.0))
+    val loads = names.map { k =>
+      val s = best(k).fold(Seq(-1.0, -1.0))(r => Seq(r.loadBefore, r.loadAfter))
       s"\"" + k + "\":[" + s.map(fmt1).mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    // what each gate left behind and its jobs, from the min pass (the
+    // first pass for a gate that failed every time)
+    val rows = names.map { k =>
+      s"\"" + k + "\":" + rowJson(best(k).getOrElse(passes.head(k)))
     }.mkString("{", ",", "}")
     // total sums only successful queries — the -1 sentinels would
     // otherwise make a broken round look FASTER than a working one
@@ -290,35 +177,26 @@ object Bench {
     // The harvester keeps only the last ~2 KB of stdout and parses the
     // final {"metric":...} line. At 76+ queries the flat per-query map
     // alone outgrows that window (rounds 5 and 7 both recorded null),
-    // so the FULL summary — per-query times, spreads, total — goes to
-    // a file and stdout carries only the bounded-size line, with the
-    // file path for readers who want the detail.
-    val summaryPath = java.nio.file.Paths.get("target/bench_summary.json")
-    java.nio.file.Files.createDirectories(summaryPath.getParent)
-    val diagField = forkDiag.map(d => s""","fork_diag":$d""").getOrElse("")
+    // so the FULL summary — per-query times, spreads, rows, total —
+    // goes to a file and stdout carries only the bounded-size line,
+    // with the file path for readers who want the detail.
     val summaryJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
         s""""failed":$failed,"n":${results.size},"queries":$qs,""" +
-        s""""spread":$spread,"load":$loads$diagField,"sf":"$sfDir"}""" + "\n"
-    java.nio.file.Files.write(summaryPath,
-      summaryJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // Durable copy OUTSIDE target/ — target is wiped by `sbt clean`
-    // and gitignored, which is why the r15 driver-vs-builder ~70 s
-    // wall gap could not be attributed after the fact (the builder's
-    // instrumented per-gate summary had been overwritten and the
-    // harvested board line carries only the total). boards/ survives
-    // and can be committed as a round receipt.
-    val boardPath = java.nio.file.Paths.get("boards/bench_latest.json")
-    java.nio.file.Files.createDirectories(boardPath.getParent)
-    java.nio.file.Files.write(boardPath,
-      summaryJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        s""""spread":$spread,"load":$loads,"gates":$rows,"sf":"$sfDir"}""" + "\n"
+    // target/ for this run; boards/ survives `sbt clean` and can be
+    // committed as a round receipt
+    val summaryPath = Paths.get("target/bench_summary.json")
+    for (p <- Seq(summaryPath, Paths.get("boards/bench_latest.json"))) {
+      Files.createDirectories(p.getParent)
+      Files.write(p, summaryJson.getBytes(UTF_8))
+    }
     // The harvester parses only the LAST ~2 KB of stdout, so the full
     // 380-gate map cannot ride the line — but a 10% total move must
-    // still be attributable from the harvested artifact alone (the
-    // r15 verdict's measurement-opacity item). Two bounded digests:
-    // the 12 slowest gates (they carry most of the wall) and per-
-    // family second totals (prefix before the first '_'), both from
-    // the same per-gate minima the total sums.
+    // still be attributable from the harvested artifact alone. Two
+    // bounded digests: the 12 slowest gates (they carry most of the
+    // wall) and per-family second totals (prefix before the first
+    // '_'), both from the same per-gate minima the total sums.
     val top = results.filter(_._2 >= 0).toSeq.sortBy(-_._2).take(12)
       .map { case (k, v) => s"\"" + k + "\":" + fmt1(v) }
       .mkString("{", ",", "}")

@@ -16,23 +16,10 @@ object Verify {
     // so wall time ≈ the critical path instead of the serial sum
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // SPARK_GRAFT_ONLY=a,b,c restricts the dump to named queries
-    // (local iteration aid, same contract as Bench; driver leaves it
-    // unset → full suite). The oracle/manifest dumps are restricted
-    // to the same set so the checker's declared-vs-output match holds.
-    // Unknown names fail fast — a typo'd name would otherwise select
-    // nothing, dump an empty manifest, and let the checker's
-    // declared-vs-output match pass vacuously while testing nothing.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.contains(n))
-    }
+    // SPARK_GRAFT_ONLY restricts the dump to named queries; the
+    // oracle/manifest dumps are restricted to the same set so the
+    // checker's declared-vs-output match holds
+    val selected = SparkEntry.selectedQueries
     val futures = selected.toSeq.map { case (name, fn) =>
       scala.concurrent.Future {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -59,7 +46,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+      .filter { case (k, _) => selected.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // manifest of ALL declared queries, so the checker can flag a

@@ -73,6 +73,6 @@ object QualityModel {
           FROM toks)
         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
                CAST(sum(w) AS BIGINT) AS score,
-               CASE WHEN sum(w) >= 0 THEN 1 ELSE 0 END::BIGINT AS keep
+               CAST(CASE WHEN sum(w) >= 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
         FROM w GROUP BY doc_id"""
 }

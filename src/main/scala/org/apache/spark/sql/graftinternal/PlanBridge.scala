@@ -4,12 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** The one sanctioned crossing into Spark's private[sql] surface, a
-  * bridge object under org.apache.spark.sql (the same trick every
-  * published Spark connector/extension uses). `Dataset.ofRows` is
-  * reached only by [[ofFileRelation]]; the other members read
-  * `queryExecution` or clone a session. Nothing else in graft touches
-  * non-public API.
+/** The one sanctioned crossing into Spark's private[sql] and
+  * private[spark] surface, a bridge object under org.apache.spark.sql
+  * (the same trick every published Spark connector/extension uses).
+  * `Dataset.ofRows` is reached only by [[ofFileRelation]]; the other
+  * members read `queryExecution`, clone a session or drain the
+  * listener bus. Nothing else in graft touches non-public API.
   */
 object PlanBridge {
   /** The file relation a `spark.read.<format>(path)` frame scans, if
@@ -38,8 +38,8 @@ object PlanBridge {
     * frame NOW instead of waiting for the RDD to be GC'd and the
     * ContextCleaner to drain its weak reference — a long-lived
     * session (the bench runs every gate 3x) otherwise accumulates
-    * dead checkpoint blocks until the next System.gc(). No-op on
-    * frames that are not checkpoint scans.
+    * dead checkpoint blocks until the next full garbage collection.
+    * No-op on frames that are not checkpoint scans.
     */
   def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
@@ -58,4 +58,11 @@ object PlanBridge {
     */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Block until every event posted so far has reached every listener
+    * (the bus delivers asynchronously), so a listener's totals and the
+    * storage sizes `getRDDStorageInfo` reports cover all jobs run so far.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -156,6 +156,17 @@ class EntryConsistencySpec extends SparkSpec {
     // and green once the CAST lands (the r9 fix)
     val fixed = r8.replace("s1 AS sum24", "CAST(s1 AS BIGINT) AS sum24")
     assert(OracleLint.uncastSumDefinition(fixed, "sum24").isEmpty)
+    // planted: text_chao1's oracle with the CAST dropped from f1. Its
+    // sum reads `c`, an alias that does carry a CAST, so only a CAST
+    // around the sum itself makes the column exact
+    val chao1 = operators.Search.chao1RichnessSql
+    val uncastF1 = chao1.replace(
+      "CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1",
+      "sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS f1")
+    assert(uncastF1 != chao1, "the planted edit must apply")
+    assert(OracleLint.uncastSumDefinition(uncastF1, "f1").isDefined,
+      "lint must flag an uncast sum over a cast column")
+    assert(OracleLint.uncastSumDefinition(chao1, "f1").isEmpty)
   }
 }
 
@@ -286,7 +297,13 @@ object OracleLint {
 
   private val AsRe = "(?i)\\bas\\s+([a-z_][a-z0-9_]*)".r
   private val SumRe = "(?i)\\bsum\\s*\\(".r
-  private val CastRe = "(?is)(cast\\s*\\(.*\\bas\\s+(big|u?huge)?int|::\\s*(big|u?huge)?int)".r
+  private val IdentRe = "(?i)\\b[a-z_][a-z0-9_]*\\b".r
+  /** Text that ends in a `CAST` call's name. */
+  private val CastCallRe = "(?is).*\\bcast\\s*".r
+  /** The body of a `CAST(<body>)` that casts to an integer type. */
+  private val IntCastBodyRe = "(?is).*\\bas\\s+(big|u?huge)?int[a-z]*\\s*".r
+  /** A `::<integer type>` suffix. */
+  private val IntSuffixRe = "(?is)\\s*::\\s*(big|u?huge)?int".r
 
   /** The expression text immediately before an ` AS <alias>` match:
     * walk backwards to the nearest top-level ',' / 'SELECT' / '('.
@@ -317,33 +334,69 @@ object OracleLint {
       (m.group(1).toLowerCase, exprBefore(sql, m.start))
     }.toSeq
 
-  /** If output column `col`'s (last) defining expression — with one
-    * level of alias expansion — contains an oracle `sum(` and no
-    * integer CAST, return the offending expression.
+  /** Whether offset `at` of `sql` lies inside a `CAST(… AS <int>)`, or
+    * inside a parenthesised group that is followed by `::<int>`.
+    */
+  private def insideIntCast(sql: String, at: Int): Boolean = {
+    def closeOf(open: Int): Int = {
+      var depth = 0; var i = open
+      while (i < sql.length) {
+        sql(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1; if (depth == 0) return i
+          case _ => ()
+        }
+        i += 1
+      }
+      sql.length
+    }
+    var depth = 0
+    var covered = false
+    var i = at - 1
+    while (i >= 0 && !covered) {
+      sql(i) match {
+        case ')' => depth += 1
+        case '(' if depth > 0 => depth -= 1
+        case '(' =>
+          val close = closeOf(i)
+          covered = (CastCallRe.matches(sql.substring(0, i)) &&
+            IntCastBodyRe.matches(sql.substring(i + 1, close))) ||
+            IntSuffixRe.findPrefixOf(sql.substring(math.min(close + 1, sql.length))).isDefined
+        case _ => ()
+      }
+      i -= 1
+    }
+    covered
+  }
+
+  /** The `sum(` calls in `expr` that no integer CAST encloses (the
+    * call's own parentheses count, for `sum(x)::BIGINT`).
+    */
+  private def uncastSums(expr: String): Seq[Int] =
+    SumRe.findAllMatchIn(expr).map(_.end).filterNot(insideIntCast(expr, _)).toSeq
+
+  /** If output column `col`'s (last) defining expression holds an
+    * oracle `sum(` outside an integer CAST — directly, or through an
+    * alias it refers to (one level of expansion) at a reference that is
+    * not itself inside one — return the offending expression.
     */
   def uncastSumDefinition(sql: String, col: String): Option[String] = {
     val defs = aliasDefs(sql)
     defs.filter(_._1 == col.toLowerCase).lastOption.flatMap { case (_, expr0) =>
-      if (CastRe.findFirstIn(expr0).isDefined) None
-      else {
-        // expand aliases referenced by the expression one level (the
-        // r8 shape: final `s1 AS sum24` where s1 = sum(n) OVER w)
-        val byAlias = defs.toMap
-        val refs = "(?i)\\b[a-z_][a-z0-9_]*\\b".r.findAllIn(expr0)
-          .map(_.toLowerCase).toSet
-        val expanded = (expr0 +: refs.toSeq.flatMap(byAlias.get)).mkString(" | ")
-        val sums = SumRe.findAllMatchIn(expanded).filter { m =>
-          // a sum immediately wrapped in CAST( is exact by construction
-          val before = expanded.substring(0, m.start).replaceAll("\\s+", "").toLowerCase
-          !before.endsWith("cast(")
-        }
-        // integer-looking: no fp literal / double cast in the sum args
-        val fpFree = !expanded.toLowerCase.contains("double") &&
-          !expanded.matches("(?s).*\\d\\.\\d.*")
-        if (sums.nonEmpty && fpFree && CastRe.findFirstIn(expanded).isEmpty)
-          Some(expr0)
-        else None
+      // the r8 shape: final `s1 AS sum24` where s1 = sum(n) OVER w
+      val byAlias = defs.toMap
+      val refs = IdentRe.findAllMatchIn(expr0).filter { m =>
+        // a type name after AS / :: is not an alias reference
+        !expr0.substring(0, m.start).trim.toLowerCase.matches("(?s)(.*\\W)?as|.*::")
+      }.flatMap(m => byAlias.get(m.matched.toLowerCase).map(m.start -> _)).toSeq
+      val uncast = uncastSums(expr0).nonEmpty || refs.exists { case (at, body) =>
+        uncastSums(body).nonEmpty && !insideIntCast(expr0, at)
       }
+      // integer-looking: no fp literal / double cast in the sum args
+      val expanded = (expr0 +: refs.map(_._2)).mkString(" | ")
+      val fpFree = !expanded.toLowerCase.contains("double") &&
+        !expanded.matches("(?s).*\\d\\.\\d.*")
+      if (uncast && fpFree) Some(expr0) else None
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Repo-wide guard against the silent scale-killer: a window with no
@@ -208,23 +209,37 @@ class WindowAuditSpec extends SparkSpec {
     // returned plan carries no window, so no exemption is needed here
   )
 
-  test("no gate query has an unpartitioned window outside the exempt set") {
+  /** Every gate's executed plan with AQE off (the static plan is the
+    * one the audits read), built once for both sweeps. Gates whose
+    * input is missing on this host are left out.
+    */
+  private lazy val plans: Map[String, SparkPlan] = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val offenders = gatesWithInputs(SparkEntry.queries.keys.toSeq.sorted).flatMap { q =>
-        val n = SparkEntry.queries(q)(spark, SF)
-          .queryExecution.executedPlan.collect {
-            case w: WindowExec if w.partitionSpec.isEmpty => w
-          }.length
-        if (n > 0) Some(q -> n) else None
-      }
-      val unexplained = offenders.filterNot { case (q, _) => exempt.contains(q) }
-      val stale = exempt.keySet -- offenders.map(_._1).toSet
-      assert(unexplained.isEmpty,
-        s"unpartitioned WindowExec in non-exempt queries: $unexplained")
-      assert(stale.isEmpty,
-        s"exemptions no longer needed (remove them): $stale")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (q, fn) if SparkSpec.missingInput(q).isEmpty =>
+        q -> fn(spark, SF).queryExecution.executedPlan
+    }.toMap finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  /** (gate, count) for each audited gate whose plan holds `count` > 0
+    * offending nodes.
+    */
+  private def sweep(offending: SparkPlan => Int): Seq[(String, Int)] =
+    gatesWithInputs(SparkEntry.queries.keys.toSeq.sorted).flatMap { q =>
+      val n = offending(plans(q))
+      if (n > 0) Some(q -> n) else None
+    }
+
+  test("no gate query has an unpartitioned window outside the exempt set") {
+    val offenders = sweep(_.collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }.length)
+    val unexplained = offenders.filterNot { case (q, _) => exempt.contains(q) }
+    val stale = exempt.keySet -- offenders.map(_._1).toSet
+    assert(unexplained.isEmpty,
+      s"unpartitioned WindowExec in non-exempt queries: $unexplained")
+    assert(stale.isEmpty,
+      s"exemptions no longer needed (remove them): $stale")
   }
 
   // ── the skewed-key variant of the same failure ────────────────────
@@ -243,14 +258,13 @@ class WindowAuditSpec extends SparkSpec {
   /** Low-card-partitioned windows in `plan` whose input is NOT
     * aggregate-sized (no aggregation anywhere below the window).
     */
-  private def lowCardOffenders(
-      plan: org.apache.spark.sql.execution.SparkPlan): Seq[WindowExec] = {
+  private def lowCardOffenders(plan: SparkPlan): Seq[WindowExec] = {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     // ReusedExchangeExec is a LEAF that points at another exchange —
     // follow it, or a histogram window whose aggregation got
     // deduplicated into a reused exchange is falsely flagged
-    def hasAggBelow(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    def hasAggBelow(p: SparkPlan): Boolean =
       p.collectFirst { case a: BaseAggregateExec => a }.nonEmpty ||
         p.collect { case r: ReusedExchangeExec => r.child }
           .exists(hasAggBelow)
@@ -273,20 +287,13 @@ class WindowAuditSpec extends SparkSpec {
   private val lowCardExempt: Map[String, String] = Map.empty
 
   test("no gate query runs a corpus-sized window partitioned by a low-cardinality key") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val offenders = gatesWithInputs(SparkEntry.queries.keys.toSeq.sorted).flatMap { q =>
-        val n = lowCardOffenders(SparkEntry.queries(q)(spark, SF)
-          .queryExecution.executedPlan).length
-        if (n > 0) Some(q -> n) else None
-      }
-      val unexplained = offenders.filterNot { case (q, _) => lowCardExempt.contains(q) }
-      val stale = lowCardExempt.keySet -- offenders.map(_._1).toSet
-      assert(unexplained.isEmpty,
-        s"corpus-sized window on a low-cardinality key: $unexplained")
-      assert(stale.isEmpty,
-        s"low-card exemptions no longer needed (remove them): $stale")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val offenders = sweep(lowCardOffenders(_).length)
+    val unexplained = offenders.filterNot { case (q, _) => lowCardExempt.contains(q) }
+    val stale = lowCardExempt.keySet -- offenders.map(_._1).toSet
+    assert(unexplained.isEmpty,
+      s"corpus-sized window on a low-cardinality key: $unexplained")
+    assert(stale.isEmpty,
+      s"low-card exemptions no longer needed (remove them): $stale")
   }
 
   test("the low-cardinality rule fires on a deliberately bad window and passes the aggregate-input form") {

@@ -10,6 +10,7 @@ hash of all values with rows sorted canonically. NOT part of the
 library — driver-side python/duckdb only.
 """
 import sys, os, json, subprocess, hashlib, glob, threading, time
+from pathlib import Path
 import duckdb
 import pandas as pd
 
@@ -540,15 +541,18 @@ REFERENCES = {
     "profile_hll_merge": ref_hll_merge,
 }
 
-sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+# absolute, since sbt runs from the checkout rather than the caller's cwd
+sf_dir = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01")
+out_dir = os.path.abspath(sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out")
 no_spark = "--no-spark" in sys.argv
 
 if not no_spark:
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    # the checkout this script sits in; SPARK_GRAFT_CPUS passes through
+    # from the caller's environment (Verify defaults to the host's cores)
     r = subprocess.run(
         ["sbt", f'runMain graft.Verify {sf_dir} {out_dir}'],
-        cwd="/root/repo", env=env, capture_output=True, text=True, timeout=3000)
+        cwd=Path(__file__).resolve().parents[1], capture_output=True,
+        text=True, timeout=3000)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:])
         sys.exit("sbt runMain graft.Verify failed")
