@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftinternal.PlanBridge
@@ -29,10 +30,15 @@ object Bench {
     * @param stages     their completed stages
     * @param taskSec    executor run time summed over those stages
     * @param jobWallSec submit-to-end wall summed over those jobs
+    * @param codegenClasses generated classes Janino compiled while the
+    *                   gate ran, i.e. codegen-cache misses
     */
   final case class Row(sec: Double, loadBefore: Double, loadAfter: Double,
       leftRdds: Int, leftBytes: Long, jobs: Int, stages: Int,
-      taskSec: Double, jobWallSec: Double)
+      taskSec: Double, jobWallSec: Double, codegenClasses: Long)
+
+  /** Janino compiles so far in this JVM, driver and local executors. */
+  private def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Credits each job that starts while a gate is open to that gate
     * (gates run serially), streaming micro-batch jobs included.
@@ -87,6 +93,7 @@ object Bench {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val loadBefore = osBean.getSystemLoadAverage
+    val compiledBefore = codegenCompiles
     meter.open()
     val t0 = System.nanoTime()
     // a failed gate records -1, never its elapsed-to-failure time: a
@@ -97,13 +104,14 @@ object Bench {
     // job ends and storage sizes reach the driver through the bus
     PlanBridge.drainListeners(sc)
     val (jobs, stages, taskSec, jobWallSec) = meter.close()
+    val codegenClasses = codegenCompiles - compiledBefore
     val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     val leftBytes = sc.getRDDStorageInfo.filter(i => left.contains(i.id))
       .map(i => i.memSize + i.diskSize).sum
     spark.catalog.clearCache()
     left.values.foreach(_.unpersist(blocking = true))
     Row(sec, loadBefore, loadAfter, left.size, leftBytes, jobs, stages,
-      taskSec, jobWallSec)
+      taskSec, jobWallSec, codegenClasses)
   }
 
   // 4 decimals (0.1 ms) — full double precision would waste ~10
@@ -113,11 +121,13 @@ object Bench {
   private def fmt1(v: Double): String =
     if (v < 0) "-1" else BigDecimal(v).setScale(1, BigDecimal.RoundingMode.HALF_UP).toString
 
-  /** A gate's row in the summary files: what it left and its jobs. */
+  /** A gate's row in the summary files: what it left, its jobs and
+    * the classes it compiled.
+    */
   def rowJson(r: Row): String =
     s"""{"left_rdds":${r.leftRdds},"left_bytes":${r.leftBytes},""" +
       s""""jobs":${r.jobs},"stages":${r.stages},"task_s":${fmt(r.taskSec)},""" +
-      s""""job_wall_s":${fmt(r.jobWallSec)}}"""
+      s""""job_wall_s":${fmt(r.jobWallSec)},"codegen_classes":${r.codegenClasses}}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -139,8 +149,11 @@ object Bench {
     val names = gates.keys.toSeq
     val meter = new JobMeter
     spark.sparkContext.addSparkListener(meter)
-    // min over three passes: pass 1 absorbs JVM/codegen/parquet-
-    // footer warmup, the min over passes 2-3 shrugs off scheduler noise
+    // min over three passes: pass 1 absorbs JVM and table-resolution
+    // warmup and compiles the board's generated classes, which the
+    // codegen cache (Graft.CodegenCacheEntries) keeps; passes 2-3 run
+    // each gate on compiled code (a gate that still compiles shows it
+    // in codegen_classes), and their min shrugs off scheduler noise
     val passes = Seq.fill(3)(gates.map { case (n, fn) => n -> runGate(spark, sfDir, fn, meter) })
     // per gate, the row of the pass that produced its min
     val best = names.map { k =>

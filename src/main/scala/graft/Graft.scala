@@ -9,6 +9,32 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
+  /** `spark.sql.codegen.cache.maxEntries`: how many compiled generated
+    * classes (whole-stage pipelines, projections, predicates) the JVM
+    * keeps. Spark's default of 100 is smaller than one warm round of
+    * graft work: perfbench's `interactive_sql` cycles through 108
+    * distinct classes and `curation_etl` through 103, and one sf0.01
+    * pass over the board compiles 4,721. An LRU smaller than a cyclic
+    * working set misses on nearly every lookup, so each round compiled
+    * 25-41 classes again in Janino (0.4-0.8 s on 4 cores) and the JIT
+    * warmed the new classes from scratch. 8192 holds the board with
+    * headroom and stays bounded: a class that embeds a per-call value
+    * never hits (860 per warm board pass, most in the stream gates), so
+    * an unbounded cache would grow on every pass. The cost is metaspace
+    * for the classes kept: after a 3-pass sf0.01 board, metaspace plus
+    * compressed class space held 320 MB against 265 MB with the
+    * default, roughly 10 kB for each class kept. Results cannot change:
+    * the cache is keyed by the full generated source, so a hit returns
+    * a class compiled from identical text.
+    *
+    * A static, JVM-wide setting: Spark reads it once, when the
+    * `CodeGenerator` object is first used. It takes effect only when
+    * [[configure]]'s builder creates the first session in the JVM; a
+    * session that `getOrCreate` picks up from elsewhere (spark-shell's,
+    * say) keeps whatever it was built with.
+    */
+  val CodegenCacheEntries = 8192
+
   /** @param shufflePartitions initial shuffle parallelism — size to
     *   ~2-3× total cores; AQE coalesces small partitions and splits
     *   skewed ones at runtime, so this is a starting point, not a
@@ -35,6 +61,8 @@ object Graft {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // compile each generated class once per JVM, not once per round
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // testdata events.parquet is TIMESTAMP(NANOS), which Spark 4
       // rejects outright; read raw nanos (Tables.events truncates)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -31,7 +31,7 @@ class BenchSpec extends SparkSpec {
       val keys = "\"([a-z_]+)\":".r.findAllMatchIn(Bench.rowJson(row))
         .map(_.group(1)).toSeq
       assert(keys == Seq("left_rdds", "left_bytes", "jobs", "stages",
-        "task_s", "job_wall_s"), gate)
+        "task_s", "job_wall_s", "codegen_classes"), gate)
     }
   }
 

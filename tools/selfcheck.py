@@ -542,9 +542,11 @@ REFERENCES = {
 }
 
 # absolute, since sbt runs from the checkout rather than the caller's cwd
+# the flag may stand anywhere; the positionals are what is left
+no_spark = "--no-spark" in sys.argv[1:]
+sys.argv[1:] = [a for a in sys.argv[1:] if a != "--no-spark"]
 sf_dir = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01")
 out_dir = os.path.abspath(sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out")
-no_spark = "--no-spark" in sys.argv
 
 if not no_spark:
     # the checkout this script sits in; SPARK_GRAFT_CPUS passes through
