@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * fresh attribute ids, so two reads of one table in one query stay
   * distinct. Entries are keyed by path, not by session: a relation
   * holds its session strongly, so per-session entries would keep every
-  * `cloneSession` child alive.
+  * stream gate's child session alive.
   */
 object Tables {
 

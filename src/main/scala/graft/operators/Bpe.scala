@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.PlanBridge
 
 /** Byte-pair-encoding tokenizer TRAINING and ENCODE as Spark plans —
   * the real subword-vocabulary loop an LLM data pipeline runs over
@@ -57,44 +58,14 @@ object Bpe {
     */
   def trainMerges(spark: SparkSession, dir: String, k: Int = 24,
       minFreq: Long = 2L): Seq[Merge] = {
-    // The k census/rewrite rounds run over the VOCABULARY frame
-    // (distinct words × freq — corpus-independent size), so the
-    // loop's shuffle width derives from the measured vocabulary
-    // count, not the session constant (guide §2 scale-adaptive
-    // partitioning; the CC-loop device): at gate scale 24 rounds ×
-    // 32-partition exchanges over a few-thousand-row frame were pure
-    // task-scheduling overhead. ~500k words per reduce task, cap
-    // 4096; the loop runs on a child session so the width is
-    // session-local.
-    val words0 = {
-      import spark.implicits._
-      vocab(Tables.documents(spark, dir))
-        .select($"f", expr(
-          "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
-          .as("syms"))
-        .localCheckpoint(true)
-    }
-    val loopParts = math.min(4096L, 1L + words0.count() / 500000L).toInt
-    val sameSession =
-      loopParts >= spark.sessionState.conf.numShufflePartitions
-    val sparkLoop =
-      if (sameSession) spark
-      else {
-        // cloneSession inherits the caller's runtime conf (see
-        // [[graft.streaming.StreamGates]]); only the loop width
-        // differs on the child
-        val s = org.apache.spark.sql.graftinternal.PlanBridge
-          .cloneSession(spark)
-        s.conf.set("spark.sql.shuffle.partitions", loopParts)
-        s
-      }
-    import sparkLoop.implicits._
-    // no external-Row round-trip when the loop runs on the caller's
-    // session — the rebuild exists only to move the frame onto the
-    // sized child session (r16 ADVICE item)
-    var words =
-      if (sameSession) words0
-      else sparkLoop.createDataFrame(words0.rdd, words0.schema)
+    import spark.implicits._
+    // the rounds run on the caller's session: AQE coalescing sizes
+    // their shuffles over the vocabulary frame (distinct words × freq)
+    var words = vocab(Tables.documents(spark, dir))
+      .select($"f", expr(
+        "transform(sequence(1, length(w)), i -> substring(w, i, 1))")
+        .as("syms"))
+      .localCheckpoint(true)
     val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
     var rank = 1
     var done = false
@@ -119,17 +90,13 @@ object Bpe {
         // Dataset.unpersist only clears CacheManager entries, which a
         // localCheckpoint never has, so the old spelling leaked every
         // round's blocks until GC (r16 ADVICE item)
-        org.apache.spark.sql.graftinternal.PlanBridge
-          .unpersistCheckpoint(words)
+        PlanBridge.unpersistCheckpoint(words)
         words = next
         out += Merge(rank, a, b, a + b, f)
         rank += 1
       }
     }
-    org.apache.spark.sql.graftinternal.PlanBridge.unpersistCheckpoint(words)
-    if (!sameSession)
-      org.apache.spark.sql.graftinternal.PlanBridge
-        .unpersistCheckpoint(words0)
+    PlanBridge.unpersistCheckpoint(words)
     out.toSeq
   }
 

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftinternal.PlanBridge
 
 /** Deduplication operators for training-data curation. All token /
   * shingle construction is shared column-expression code (no UDFs) so
@@ -323,73 +324,38 @@ object Dedup {
     * constant per component → the min id, which seeds as its own
     * label and never decreases.
     *
-    * The edge set is hash-partitioned on `src` once and cached, so
-    * each round's propagate join only exchanges the (small) frontier.
-    * Each round materializes into an explicitly-persisted RDD (which
-    * both truncates lineage and gives a handle to free), and the
-    * PREVIOUS round's blocks are unpersisted as soon as the next
-    * round is materialized — live memory is one label-set copy plus
-    * the edges, not one copy per round. The final round's blocks back
-    * the returned DataFrame (persisted; caller may unpersist via its
-    * rdd when done).
+    * The loop runs on the caller's session; AQE coalescing sizes its
+    * shuffles. The undirected edge set is derived once into a
+    * localCheckpoint, but the checkpoint does not keep its hash
+    * partitioning under AQE, so each round's propagate join
+    * re-exchanges the edge side along with the frontier. Each round's
+    * labels are a localCheckpoint (lineage truncated, blocks freeable
+    * by handle), materialized by the frontier count, and the PREVIOUS
+    * round's blocks are released as soon as the next round is
+    * materialized — live memory is one label-set copy plus the edges,
+    * not one copy per round. The final round's blocks back the
+    * returned DataFrame; the caller may release them with
+    * `PlanBridge.unpersistCheckpoint`.
     *
     * Output: (doc_id, cluster_id = min doc_id in the component) for
     * every doc that appears in a pair.
     */
   def clusters(pairs: DataFrame, idA: String = "doc_a",
       idB: String = "doc_b"): DataFrame = {
-    val spark0 = pairs.sparkSession
-    // Size the label loop's shuffles from the MEASURED edge count
-    // (guide §2: partitioning must derive from input size, not a
-    // session constant). Each propagation round is 3-4 label-sized
-    // exchanges; at the session default every exchange ships
-    // (partitions × rounds) fixed-cost tasks regardless of data —
-    // measured on the dbscan family: ~6 AQE-stage jobs × 32 tasks per
-    // round over frames of a few hundred KB, ~0.6 s/round of pure
-    // scheduling. ~2M undirected edge rows (~100 MB) per reduce task,
-    // capped at 4096; the loop runs on a CHILD session so the width
-    // is session-local and the caller's session is untouched. The
-    // pair frame is materialized ONCE into a persisted RDD (this is
-    // the same single derivation pass the previous cache() paid) and
-    // both the count and the loop read from it. ~500k edge rows per
-    // reduce task: the round's work is CPU-bound label probing, so
-    // tasks are sized for compute balance, not shuffle-byte balance.
-    val pairsRdd = pairs.select(col(idA).as("src"), col(idB).as("dst")).rdd
-    pairsRdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val m = pairsRdd.count()
-    val undParts = math.min(4096L, 1L + (2L * m) / 500000L).toInt
-    val spark =
-      if (undParts >= spark0.sessionState.conf.numShufflePartitions) spark0
-      else {
-        // cloneSession inherits the caller's runtime conf (see
-        // [[graft.streaming.StreamGates]]); only the loop width
-        // differs on the child
-        val s = org.apache.spark.sql.graftinternal.PlanBridge
-          .cloneSession(spark0)
-        s.conf.set("spark.sql.shuffle.partitions", undParts)
-        s
-      }
+    val spark = pairs.sparkSession
     import spark.implicits._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("src",
-        pairs.schema(idA).dataType),
-      org.apache.spark.sql.types.StructField("dst",
-        pairs.schema(idB).dataType)))
-    val e = spark.createDataFrame(pairsRdd, schema)
+    val e = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+    // localCheckpoint, NOT cache(): a CacheManager entry would be keyed
+    // on the caller's pair plan, which peer gates build too, and a
+    // peer's unpersist could remove it mid-loop (see Graph.pageRankOf)
     val und = e.union(e.select($"dst".as("src"), $"src".as("dst")))
-      .repartition($"src").cache()
-    // materialize: persist the row RDD and rebuild a DataFrame on it —
-    // lineage truncated at the RDD, blocks freeable by handle
-    def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (spark.createDataFrame(rdd, df.schema), rdd)
-    }
+      .repartition($"src").localCheckpoint(false)
     try {
       // seed with min(self, direct neighbors) — one aggregation that
       // saves a full propagation round vs label := self
-      var (labels, liveRdd) = materialize(und.groupBy($"src".as("id"))
-        .agg(least(min($"dst"), first($"src")).as("label")))
+      var labels = und.groupBy($"src".as("id"))
+        .agg(least(min($"dst"), first($"src")).as("label"))
+        .localCheckpoint(false)
       // every seed label is new information, so the whole node set is
       // the first frontier
       var frontier = labels
@@ -401,25 +367,18 @@ object Dedup {
           .groupBy($"dst".as("id")).agg(min($"label").as("offer"))
         // one left join derives both next labels and the next
         // frontier from a single materialized step
-        val (step, stepRdd) = materialize(labels.join(offers, Seq("id"), "left")
+        val step = labels.join(offers, Seq("id"), "left")
           .select($"id",
             when($"offer" < $"label", $"offer").otherwise($"label").as("label"),
-            coalesce($"offer" < $"label", lit(false)).as("improved")))
+            coalesce($"offer" < $"label", lit(false)).as("improved"))
+          .localCheckpoint(false)
         frontier = step.filter($"improved").select($"id", $"label")
-        active = frontier.count() // materializes stepRdd
-        liveRdd.unpersist()
-        liveRdd = stepRdd
+        active = frontier.count() // materializes step
+        PlanBridge.unpersistCheckpoint(labels)
         labels = step.select($"id", $"label")
       }
-      // re-wrap on the CALLER's session only when the loop ran on a
-      // sized child — when no child was created the projection is
-      // already the caller's frame and the external-Row round-trip
-      // (deserialize + re-encode every row) would be pure overhead
-      // (r16 ADVICE item)
-      val out = labels.select($"id".as("doc_id"), $"label".as("cluster_id"))
-      if (spark eq spark0) out
-      else spark0.createDataFrame(out.rdd, out.schema)
-    } finally { und.unpersist(); pairsRdd.unpersist() }
+      labels.select($"id".as("doc_id"), $"label".as("cluster_id"))
+    } finally PlanBridge.unpersistCheckpoint(und)
   }
 
   /** Gate query: clusters over the ≥0.5-jaccard pair graph. */

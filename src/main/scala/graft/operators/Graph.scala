@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   * plan is also exactly what Spark executes here.
   *
   * Scale shape: the edge list (joined with its out-degrees) is
-  * cached pre-partitioned on src once; each iteration shuffles only
-  * the (node, rank) scalars back to that partitioning plus the
-  * Σcontrib aggregate — the per-iteration minimum for distributed
-  * PageRank. Rank mass is ≤ 10⁶·N micro-units, so the 850·sum
+  * checkpointed once. Under AQE the checkpoint does not keep its hash
+  * partitioning on src, so each iteration's join re-exchanges the
+  * edge side along with the (node, rank) scalars, plus the Σcontrib
+  * aggregate. Rank mass is ≤ 10⁶·N micro-units, so the 850·sum
   * intermediate stays within long range up to ~10¹⁰ nodes.
   */
 object Graph {
@@ -208,19 +208,18 @@ object Graph {
     // reaped by GC.
     val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
       .localCheckpoint(true)
-    // one cached copy serves every iteration; the shuffle join on src
-    // already leaves it hash-partitioned on src (an explicit
-    // repartition here would be a second full exchange of the edge
-    // list for the identical partitioning), and only scalar
-    // (node, rank) rows move per step
+    // one checkpointed copy serves every iteration; under AQE the
+    // checkpoint forgets the join's hash partitioning on src, so each
+    // iteration's join re-exchanges the edge side with the scalar
+    // (node, rank) rows
     val e = edges.join(deg, "src")
       .localCheckpoint(true)
     // the per-iteration join streams the edge list against the
     // node-sized rank frame: SHUFFLE_HASH on the rank side skips the
-    // sort-merge join's re-sort of the (already co-partitioned) edge
-    // list every iteration (guide §3.1 — build the moderately-small
-    // side per partition; measured 2.84 → 2.23 s for the 5-iteration
-    // loop body at sf0.1/local[32], OPTIMIZATION_r17.md "Batch 1").
+    // sort-merge join's re-sort of the edge list every iteration
+    // (guide §3.1 — build the moderately-small side per partition;
+    // measured 2.84 → 2.23 s for the 5-iteration loop body at
+    // sf0.1/local[32], OPTIMIZATION_r17.md "Batch 1").
     // The build side is node-scale, so per-partition hash tables stay
     // small at any production partition count.
     var ranks = deg.select($"src".as("node"), lit(1000000L).as("rank"))
@@ -564,8 +563,8 @@ object Graph {
     * so rank·w stays under 2⁶³ while N·max(w) < ~9·10¹² — e.g. 10⁹
     * nodes with weights to 10³; beyond that, rescale weights first.
     * Same plan shape as the unweighted form: edge list joined with
-    * its out-weight once and cached hash-partitioned on src, only
-    * (node, rank) scalars shuffle per iteration.
+    * its out-weight and checkpointed once; each iteration's join
+    * re-exchanges the edge side with the (node, rank) scalars.
     */
   def pageRankWeightedOf(edges: DataFrame, iters: Int, topK: Int): DataFrame = {
     val spark = edges.sparkSession
@@ -754,25 +753,25 @@ object Graph {
     * invariant), so only the improved set needs to propagate. All
     * integer, so min-combining is exact on any merge order.
     *
-    * Scale shape: the weighted edge list is cached hash-partitioned
-    * on src once; per round one frontier join on that partitioning +
-    * one map-side-combined min per dst + one anti-join against the
-    * node-sized distance map — only (node, dist) scalars shuffle,
-    * and each round's lineage is truncated (same device as
-    * [[kHopOf]]) so round k never replays rounds 1..k−1. Work is
-    * O(|E touched by improvements|) per round, the distributed-SSSP
-    * minimum; bounded rounds make the gate oracle-expressible
-    * (unrolled CTEs), and unbounded SSSP is the same loop run to an
-    * empty frontier.
+    * Scale shape: the weighted edge list is checkpointed once; per
+    * round one frontier join (which re-exchanges the edge side: under
+    * AQE the checkpoint forgets its partitioning on src) + one
+    * map-side-combined min per dst + one anti-join against the
+    * node-sized distance map, and each round's lineage is truncated
+    * (same device as [[kHopOf]]) so round k never replays rounds
+    * 1..k−1. Work is O(|E touched by improvements|) per round, the
+    * distributed-SSSP minimum; bounded rounds make the gate
+    * oracle-expressible (unrolled CTEs), and unbounded SSSP is the
+    * same loop run to an empty frontier.
     */
   def ssspDistsOf(edges: DataFrame, seedMod: Long, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // r17 rework. (1) The weighted edge generator hands the frame
-    // over UNclustered (union of two projections), so without an
-    // explicit repartition every round's frontier join re-exchanged
-    // the full edge list — cluster it on src once (guide §2.4; the
-    // unweighted operators get this for free from copurchaseEdges).
+    // over UNclustered (union of two projections); it is clustered on
+    // src and checkpointed once, but under AQE the checkpoint forgets
+    // that partitioning, so each round's frontier join re-exchanges
+    // the edge side.
     // (2) One checkpoint per round instead of two: the round's merge
     // is a single full-outer join producing (node, dist, improved) —
     // the [[Dedup.clusters]] step device — replacing the old
@@ -882,12 +881,12 @@ object Graph {
     import spark.implicits._
     def cached(df: DataFrame): DataFrame =
       if (materialize) df.localCheckpoint(true) else df
-    // ONE materialization: [[copurchaseEdges]] hands the frame over
-    // already clustered on src (and localCheckpoint preserves the
-    // partitioning), so deg and both self-join sides run off this
-    // single checkpoint zero-exchange — the r16 probe charged ~4 s of
-    // the old gate to the extra e-checkpoint + repartition + count
-    // passes this replaces.
+    // ONE materialization: deg and both self-join sides run off this
+    // single checkpoint. Under AQE the checkpoint forgets the src
+    // clustering [[copurchaseEdges]] hands over, so the joins on it
+    // re-exchange the edge side — the r16 probe charged ~4 s of the
+    // old gate to the extra e-checkpoint + repartition + count passes
+    // this replaces.
     val nb = cached(edges)
     // min/max(dst) ride the SAME per-src aggregation pass the degree
     // census pays, so the id-range guard below can bound BOTH
@@ -2437,11 +2436,12 @@ object Graph {
     * device as [[ssspDistsOf]]; paths longer than `hops` simply
     * don't contribute (δ at the horizon level is 0).
     *
-    * Scale shape: edges cached hash-partitioned on src once; every
-    * forward level is one frontier join on that partitioning + one
-    * partial-agg'd σ-sum, every backward level one join pair on the
-    * same key — only (s, node, σ/δμ) scalars shuffle, lineage
-    * truncated per level. Work is O(|seeds| · |E ≤ hops out|):
+    * Scale shape: edges checkpointed once; every forward level is one
+    * frontier join + one partial-agg'd σ-sum, every backward level
+    * one join pair on the same key. Under AQE the checkpoint forgets
+    * its partitioning on src, so each of those joins re-exchanges the
+    * edge side with the (s, node, σ/δμ) scalars; lineage truncated
+    * per level. Work is O(|seeds| · |E ≤ hops out|):
     * `seedMod` (density) and `hops` (horizon) are the two budget
     * knobs, exactly the SpaceSaving/IVF posture — the exact global
     * algorithm exists (seedMod = 1, hops = diameter) but is an
@@ -2591,9 +2591,10 @@ object Graph {
     * BIGINTs, the per-level weights are CONSTANTS, no fp anywhere.
     *
     * Scale shape: identical to the betweenness forward pass minus σ
-    * — edges cached hash-partitioned on src once, one frontier join +
-    * partial-agg'd distinct per level, only (s, node) scalars
-    * shuffle, lineage truncated per level.
+    * — edges checkpointed once, one frontier join + partial-agg'd
+    * distinct per level; each join re-exchanges the edge side with
+    * the (s, node) scalars (under AQE the checkpoint forgets its
+    * partitioning on src), lineage truncated per level.
     */
   def harmonicOf(edges: DataFrame, seedMod: Long, hops: Int,
       topK: Int): DataFrame = {

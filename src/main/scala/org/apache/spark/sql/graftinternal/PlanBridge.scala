@@ -52,9 +52,11 @@ object PlanBridge {
     * `newSession()` starts from the builder-time defaults, silently
     * dropping conf the caller set at runtime (e.g. a probe harness
     * disabling AQE coalescing); `cloneSession()` copies the live
-    * session state. Used by the operators that run sized loops or
-    * stateful streams on a child session with a different shuffle
-    * width.
+    * session state. Its one caller is
+    * [[graft.streaming.StreamGates]]' stream session: a stateful
+    * query fixes its state-store count at first start and runs with
+    * AQE off, so the stream gates set their shuffle width on a child
+    * session instead of the caller's.
     */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()

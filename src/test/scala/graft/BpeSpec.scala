@@ -118,6 +118,14 @@ class BpeSpec extends SparkSpec {
     }
   }
 
+  test("trainer releases every vocabulary checkpoint it makes") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    assert(Bpe.trainMerges(spark, SF, k = 4).nonEmpty)
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.isEmpty, s"persisted RDDs left by trainMerges: $left")
+  }
+
   test("merges compress: encoded corpus is shorter than its characters") {
     val merges = Bpe.trainMerges(spark, SF, k = 16)
     assert(merges.nonEmpty && merges.head.freq >= merges.last.freq,

@@ -1,8 +1,35 @@
 package graft
 
 import graft.operators.Dedup
+import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.graftinternal.PlanBridge
+import org.apache.spark.sql.types.IntegerType
 
 class ClusterSpec extends SparkSpec {
+
+  /** Runs `body` and returns its result with the ids of the RDDs it
+    * persisted and still holds, and of those it created and released.
+    * Only RDDs created inside `body` count: their ids lie above a
+    * marker RDD made first (RDD ids only grow).
+    */
+  private def persistedBy[T](body: => T): (T, Set[Int], Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val released = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit =
+        released.add(e.rddId)
+    }
+    val marker = sc.emptyRDD[Int].id
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      PlanBridge.drainListeners(sc)
+      val held = sc.getPersistentRDDs.keySet.toSet -- before
+      import scala.jdk.CollectionConverters._
+      (out, held, released.asScala.toSet.filter(_ > marker))
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("min-label propagation finds exact connected components") {
     import spark.implicits._
@@ -14,6 +41,41 @@ class ClusterSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
+  }
+
+  test("the label loop releases every round but the last, which backs the result") {
+    import spark.implicits._
+    val pairs = Seq((3L, 4L), (1L, 2L), (2L, 3L), (10L, 11L))
+      .toDF("doc_a", "doc_b")
+    val (result, held, released) = persistedBy {
+      val r = Dedup.clusters(pairs)
+      r.collect()
+      r
+    }
+    assert(held.size == 1, s"held=$held")
+    assert(released.nonEmpty && (held & released).isEmpty,
+      s"held=$held released=$released")
+    PlanBridge.unpersistCheckpoint(result)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(held.head))
+  }
+
+  test("empty pairs give an empty (doc_id, cluster_id) frame of the input's id type after the seed round") {
+    import spark.implicits._
+    val pairs = Seq.empty[(Int, Int)].toDF("doc_a", "doc_b")
+    val (result, held, released) = persistedBy {
+      val r = Dedup.clusters(pairs)
+      assert(r.collect().isEmpty)
+      r
+    }
+    assert(result.columns.toSeq == Seq("doc_id", "cluster_id"))
+    assert(result.schema.fields.map(_.dataType).toSeq ==
+      Seq(IntegerType, IntegerType))
+    // one propagation round over the (empty) seed frontier: the edge
+    // set and the seed labels are released, that round's labels back
+    // the result; a second round would release a third checkpoint
+    assert(held.size == 1 && released.size == 2,
+      s"held=$held released=$released")
+    PlanBridge.unpersistCheckpoint(result)
   }
 
   test("cluster ids are the component minimum on real pairs") {
