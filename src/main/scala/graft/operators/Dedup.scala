@@ -347,7 +347,7 @@ object Dedup {
     val e = pairs.select(col(idA).as("src"), col(idB).as("dst"))
     // localCheckpoint, NOT cache(): a CacheManager entry would be keyed
     // on the caller's pair plan, which peer gates build too, and a
-    // peer's unpersist could remove it mid-loop (see Graph.pageRankOf)
+    // peer's unpersist could remove it mid-loop (see Graph.pageRankWeightedOf)
     val und = e.union(e.select($"dst".as("src"), $"src".as("dst")))
       .repartition($"src").localCheckpoint(false)
     try {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over the part co-purchase graph (edges =
@@ -38,9 +38,6 @@ object Graph {
     */
   val DefaultWedgeBudget: Long = 4000000000L
 
-  /** Enforce the wedge budget off an already-computed degree frame —
-    * one aggregate over the node-sized frame, nothing edge-sized.
-    */
   /** Σ C(deg, 2) off an already-computed degree frame — one aggregate
     * over the node-sized frame, nothing edge-sized.
     */
@@ -51,9 +48,11 @@ object Graph {
       .head.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
   }
 
-  private def requireWedgeBudget(deg: DataFrame, degCol: String,
+  /** Throw, naming `op` and its scale valve, when a measured wedge
+    * stream is past the budget.
+    */
+  private def requireWedgeBudget(wedges: Long,
       budget: Long, op: String, valve: String): Unit = {
-    val wedges = wedgeSum(deg, degCol)
     if (wedges > budget) throw new IllegalStateException(
       s"$op: wedge stream is sum C(deg,2) = $wedges > budget $budget — " +
         s"the exact form is past-budget at this scale; use $valve, or " +
@@ -191,52 +190,13 @@ object Graph {
       .dropDuplicates("src", "dst")
   }
 
-  /** Gate: 5 integer-unit PageRank iterations, top 20 parts. */
+  /** Gate: 5 integer-unit PageRank iterations, top 20 parts — the
+    * unit-weight case of [[pageRankWeightedOf]]: with w = 1,
+    * (rank·w) div Σ_out w is rank div outdeg.
+    */
   def pageRank(spark: SparkSession, dir: String): DataFrame =
-    pageRankOf(copurchaseEdges(spark, dir), iters = 5, topK = 20)
-
-  def pageRankOf(edges: DataFrame, iters: Int, topK: Int): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // node-count-sized; materialized because it seeds the ranks AND
-    // joins the edge list. localCheckpoint, NOT persist: plan-keyed
-    // cache entries are process-global, and the deg/e plans here are
-    // structurally identical across the PageRank-family gates — a
-    // peer gate's unpersist under Verify's 4-way concurrency yanked
-    // the shared entry mid-loop (observed once as an empty propagation
-    // in graph_ppr, r11). Checkpoint blocks are RDD-private and
-    // reaped by GC.
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    // one checkpointed copy serves every iteration; under AQE the
-    // checkpoint forgets the join's hash partitioning on src, so each
-    // iteration's join re-exchanges the edge side with the scalar
-    // (node, rank) rows
-    val e = edges.join(deg, "src")
-      .localCheckpoint(true)
-    // the per-iteration join streams the edge list against the
-    // node-sized rank frame: SHUFFLE_HASH on the rank side skips the
-    // sort-merge join's re-sort of the edge list every iteration
-    // (guide §3.1 — build the moderately-small side per partition;
-    // measured 2.84 → 2.23 s for the 5-iteration loop body at
-    // sf0.1/local[32], OPTIMIZATION_r17.md "Batch 1").
-    // The build side is node-scale, so per-partition hash tables stay
-    // small at any production partition count.
-    var ranks = deg.select($"src".as("node"), lit(1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      ranks = e.join(ranks.hint("shuffle_hash"), $"src" === $"node")
-        .select($"dst", expr("rank div outdeg").as("contrib"))
-        .groupBy($"dst")
-        .agg(expr("150000L + (850L * sum(contrib)) div 1000L").as("rank"))
-        .select($"dst".as("node"), $"rank")
-    }
-    // materialize the top-k rows eagerly; localCheckpoint rather
-    // than cache() so repeated invocations don't alias each other
-    // through the plan-keyed CacheManager (which would make any run
-    // after the first read a 20-row cache — unrepresentative)
-    ranks.orderBy($"rank".desc, $"node").limit(topK)
-      .localCheckpoint(true)
-  }
+    pageRankWeightedOf(copurchaseEdges(spark, dir)
+      .select(col("src"), col("dst"), lit(1L).as("w")), iters = 5, topK = 20)
 
   /** Oracle: the identical five stages unrolled as chained CTEs. */
   val pageRankSql: String = {
@@ -327,7 +287,7 @@ object Graph {
     // sizes the closing-join broadcast below (census-measured, never
     // a planner estimate — the checkpointed frame has default stats).
     val oc = oriented.groupBy($"u").agg(count(lit(1)).as("odeg"))
-    requireWedgeBudget(oc, "odeg",
+    requireWedgeBudget(wedgeSum(oc, "odeg"),
       wedgeBudget, "trianglesOf",
       "edge-sampling estimation (Doulion-style) on a subgraph")
     val orientedRows = Option(oc.agg(sum($"odeg")).head.get(0))
@@ -449,17 +409,62 @@ object Graph {
        FROM tnodes GROUP BY node
        ORDER BY triangles DESC, node LIMIT 20"""
 
+  /** The nodes of a checkpointed (src, dst) frame whose id ≡ 0 mod
+    * `seedMod` — the sampled seed set of the BFS-family gates.
+    */
+  private def seedNodes(e: DataFrame, seedMod: Long): DataFrame =
+    e.select(col("src").as("node")).distinct()
+      .filter(col("node") % seedMod === 0)
+
+  /** The seeded BFS of [[kHopOf]], [[harmonicOf]] and
+    * [[linClosenessOf]]: `levels(l)` holds the (s, node) pairs first
+    * reached at hop l from source s, and `levels(0)` the seeds. The
+    * first level a pair appears IS its distance (the (s, node)
+    * anti-join against the visited set guarantees it), and the
+    * frontier is always the distinct NEW layer, so a node is expanded
+    * once per source however many paths reach it (work is
+    * O(|E reachable|) per source, not O(paths) — the difference
+    * between BFS and path enumeration on a 100 TB graph). Seeds that
+    * share one source id run as one multi-source BFS: each node then
+    * appears once, at its minimum hop over all of them.
+    *
+    * `e` is the caller's checkpointed (src, dst) frame. Per level:
+    * one SHUFFLE_HASH frontier join (the [[pageRankWeightedOf]]
+    * rationale — no edge re-sort per level; under AQE it re-exchanges
+    * the edge side with the (s, node) scalars); the distinct BEFORE
+    * the visited anti-join (aggregate before you shuffle: the raw
+    * frontier×edge stream repeats each (s, dst) ~deg times, so the
+    * anti-join exchanges the collapsed set — identical result, it
+    * drops whole keys either way); one localCheckpoint, so level l's
+    * lineage starts from level l−1 instead of replaying every earlier
+    * join (without it the BFS goes quadratic in jobs). `vis` stays a
+    * LAZY union of the checkpointed levels — no checkpoint job of its
+    * own. [[betweennessOf]] keeps its own forward loop: it sums path
+    * counts σ per (s, node), which a merged seed set could overflow.
+    */
+  private def seededBfs(e: DataFrame, seeds: DataFrame,
+      hops: Int): IndexedSeq[DataFrame] = {
+    val levels = new Array[DataFrame](hops + 1)
+    levels(0) = seeds.select(col("s"), col("node")).localCheckpoint(true)
+    var vis = levels(0)
+    for (l <- 1 to hops) {
+      levels(l) = e.join(levels(l - 1).hint("shuffle_hash"),
+          col("src") === col("node"))
+        .select(col("s"), col("dst").as("node")).distinct()
+        .join(vis.select(col("s").as("vs"), col("node").as("vn")),
+          col("s") === col("vs") && col("node") === col("vn"), "left_anti")
+        .localCheckpoint(true)
+      vis = vis.unionByName(levels(l))
+    }
+    levels.toIndexedSeq
+  }
+
   /** Min-hop BFS layers: nodes within `hops` hops of the seed set
     * (graph nodes whose id ≡ 0 mod 97), reported as one row per hop
-    * (count + id checksum). Per hop the work is one frontier join
-    * (shuffled on the edge partitioning, like the PageRank step) plus
-    * one anti-join against the visited set — the distributed-BFS
-    * minimum; the frontier is always the distinct NEW layer, so a
-    * node is expanded exactly once no matter how many paths reach it
-    * (work is O(|E reachable|) total, not O(paths), which is the
-    * difference between BFS and path enumeration on a 100 TB graph).
-    * The oracle unrolls the identical layers as chained CTEs — same
-    * device as [[pageRankSql]].
+    * (count + id checksum) — [[seededBfs]] with every seed under one
+    * source id, so a node counts once, at its minimum hop. The oracle
+    * unrolls the identical layers as chained CTEs — same device as
+    * [[pageRankSql]].
     */
   def kHop(spark: SparkSession, dir: String): DataFrame =
     kHopOf(copurchaseEdges(spark, dir), seedMod = 97L, hops = 3)
@@ -468,30 +473,14 @@ object Graph {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = edges.localCheckpoint(true)
-    // each level is eagerly materialized (localCheckpoint): the next
-    // level's lineage starts from the small (node, hop) set instead
-    // of replaying every earlier frontier join — without this, level
-    // h re-executes levels 1..h-1 and the BFS goes quadratic in jobs
-    var frontier = e.select($"src".as("node")).distinct()
-      .filter($"node" % seedMod === 0)
-      .withColumn("hop", lit(0L))
-      .localCheckpoint(true)
-    var visited = frontier
-    for (h <- 1 to hops) {
-      // SHJ-hinted frontier join — the [[pageRankOf]] rationale
-      frontier = e.join(frontier.select($"node").hint("shuffle_hash"),
-          $"src" === $"node")
-        .select($"dst".as("node")).distinct()
-        .join(visited.select($"node"), Seq("node"), "left_anti")
-        .withColumn("hop", lit(h.toLong))
-        .localCheckpoint(true)
-      visited = visited.unionByName(frontier)
-    }
-    val out = visited.groupBy($"hop")
+    seededBfs(e, seedNodes(e, seedMod).select(lit(0L).as("s"), $"node"), hops)
+      .zipWithIndex
+      .map { case (level, h) => level.select($"node", lit(h.toLong).as("hop")) }
+      .reduce(_ unionByName _)
+      .groupBy($"hop")
       .agg(count(lit(1)).as("n"), sum($"node").as("node_sum"))
       .orderBy($"hop")
       .localCheckpoint(true)
-    out
   }
 
   /** Oracle: the same BFS layers unrolled (h1..h3), NOT-IN for the
@@ -557,24 +546,40 @@ object Graph {
   def pageRankWeighted(spark: SparkSession, dir: String): DataFrame =
     pageRankWeightedOf(copurchaseEdgesWeighted(spark, dir), iters = 5, topK = 20)
 
-  /** Weight-proportional PageRank: contribution = (rank·w) div Σ_out w,
-    * all integer — bit-exact on any merge order, same exactness device
-    * as [[pageRankOf]]. Long headroom: rank mass ≤ 10⁶·N micro-units,
-    * so rank·w stays under 2⁶³ while N·max(w) < ~9·10¹² — e.g. 10⁹
-    * nodes with weights to 10³; beyond that, rescale weights first.
-    * Same plan shape as the unweighted form: edge list joined with
-    * its out-weight and checkpointed once; each iteration's join
-    * re-exchanges the edge side with the (node, rank) scalars.
+  /** Weight-proportional PageRank over (src, dst, w): contribution =
+    * (rank·w) div Σ_out w, all integer — bit-exact on any merge order
+    * (the exactness device of the class doc). Unweighted callers pass
+    * w = 1. Long headroom: rank mass ≤ 10⁶·N micro-units, so rank·w
+    * stays under 2⁶³ while N·max(w) < ~9·10¹² — e.g. 10⁹ nodes with
+    * weights to 10³; beyond that, rescale weights first.
     */
   def pageRankWeightedOf(edges: DataFrame, iters: Int, topK: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    // node-count-sized; materialized because it seeds the ranks AND
+    // joins the edge list. localCheckpoint, NOT persist: plan-keyed
+    // cache entries are process-global, and the wout/e plans here are
+    // structurally identical across the PageRank-family gates — a
+    // peer gate's unpersist under Verify's 4-way concurrency yanked
+    // the shared entry mid-loop (observed once as an empty propagation
+    // in graph_ppr, r11). Checkpoint blocks are RDD-private and
+    // reaped by GC.
     val wout = edges.groupBy($"src").agg(sum($"w").as("wout"))
       .localCheckpoint(true)
+    // one checkpointed copy serves every iteration; under AQE the
+    // checkpoint forgets the join's hash partitioning on src, so each
+    // iteration's join re-exchanges the edge side with the scalar
+    // (node, rank) rows
     val e = edges.join(wout, "src")
       .localCheckpoint(true)
-    // SHUFFLE_HASH on the node-sized rank side — the [[pageRankOf]]
-    // rationale: no edge-list re-sort per iteration
+    // the per-iteration join streams the edge list against the
+    // node-sized rank frame: SHUFFLE_HASH on the rank side skips the
+    // sort-merge join's re-sort of the edge list every iteration
+    // (guide §3.1 — build the moderately-small side per partition;
+    // measured 2.84 → 2.23 s for the 5-iteration loop body at
+    // sf0.1/local[32], OPTIMIZATION_r17.md "Batch 1").
+    // The build side is node-scale, so per-partition hash tables stay
+    // small at any production partition count.
     var ranks = wout.select($"src".as("node"), lit(1000000L).as("rank"))
     for (_ <- 1 to iters) {
       ranks = e.join(ranks.hint("shuffle_hash"), $"src" === $"node")
@@ -583,9 +588,12 @@ object Graph {
         .agg(expr("150000L + (850L * sum(contrib)) div 1000L").as("rank"))
         .select($"dst".as("node"), $"rank")
     }
-    val out = ranks.orderBy($"rank".desc, $"node").limit(topK)
+    // materialize the top-k rows eagerly; localCheckpoint rather
+    // than cache() so repeated invocations don't alias each other
+    // through the plan-keyed CacheManager (which would make any run
+    // after the first read a 20-row cache — unrepresentative)
+    ranks.orderBy($"rank".desc, $"node").limit(topK)
       .localCheckpoint(true)
-    out
   }
 
   /** Oracle: unrolled CTE chain, weights via the self-join count the
@@ -776,7 +784,7 @@ object Graph {
     // is a single full-outer join producing (node, dist, improved) —
     // the [[Dedup.clusters]] step device — replacing the old
     // improved-checkpoint + anti-join + union + dists-checkpoint.
-    // (3) SHUFFLE_HASH on the node-sized frontier ([[pageRankOf]]).
+    // (3) SHUFFLE_HASH on the node-sized frontier ([[pageRankWeightedOf]]).
     val e = edges.repartition($"src").localCheckpoint(true)
     var dists = e.select($"src".as("node")).distinct()
       .filter($"node" % seedMod === 0)
@@ -851,6 +859,106 @@ object Graph {
               CAST(sum(id) AS BIGINT) AS node_sum
        FROM labels GROUP BY component ORDER BY component"""
 
+  /** Exact non-adjacent candidate pairs of a both-directions edge
+    * frame — the wedge census of [[neighborJaccardOf]] and
+    * [[adamicAdarOf]], and the one owner of their packed pair format
+    * (a·2³² + b in one long).
+    *
+    * ONE materialization: the degree census and both self-join sides
+    * run off a single checkpoint of `edges`. Under AQE the checkpoint
+    * forgets the src clustering [[copurchaseEdges]] hands over, so
+    * the joins on it re-exchange the edge side — the r16 probe charged
+    * ~4 s of the old gate to the extra e-checkpoint + repartition +
+    * count passes this replaces. min/max(dst) ride the census's
+    * per-src pass, so ONE node-sized pre-flight aggregate over it
+    * yields every runtime precondition and sizing knob:
+    * (1) id range: the pair packing needs ids in [0, 2³²) — out of
+    *     range would COLLIDE keys (silently wrong counts); BOTH src
+    *     and dst domains are checked (r16 ADVICE: a caller violating
+    *     the symmetric-edge contract could slip an out-of-range dst
+    *     past a src-only check);
+    * (2) the wedge budget — EVERY apex's C(deg,2) wedges are the
+    *     payload (orientation can't cap them), so past the ceiling
+    *     the guard names `op`'s sketch `valve` and throws;
+    * (3) |V| and |E|, which size the small-side joins.
+    *
+    * Wedges: both directions are present, so an apex's full
+    * neighborhood is its out-list; a < b emits each unordered pair
+    * once per shared neighbor. Generation is the co-partitioned
+    * self-join (the triangles device); the a < b filter + pair
+    * packing run inside whole-stage codegen — no per-apex C(deg,2)
+    * array ever materializes (a 10⁶-wedge hub row would).
+    * `apex(nb, deg)` is the self-join's apex side, (src, a, payload…)
+    * with a a neighbor of src; `aggs` fold the payload per pair.
+    *
+    * The fold is an explicit repartition on pk + aggregate, NOT a
+    * bare groupBy: candidate pairs barely repeat (sf0.1: 148 M
+    * wedges → 102 M distinct pairs), so map-side partial aggregation
+    * buys a 1.4× row cut while its per-map hash table holds the whole
+    * near-distinct key set — measured 41 s vs 15 s for the
+    * shuffle-raw-longs-then-aggregate-once shape (sf0.1, 32 cores;
+    * OPTIMIZATION_r16.md §1 "Graph family"). Partition count scales
+    * with the measured wedge stream (≥ session parallelism, ~3 M
+    * wedges per task) instead of being a local constant.
+    *
+    * Adjacency exclusion on the SAME packed key: the candidate side
+    * keeps its hash(pk) layout from the aggregate (zero exchange on
+    * the 10⁸-row side; only the edge-sized side moves), and an edge
+    * set small enough to ship outright is broadcast — sized from the
+    * census, not guessed from plan statistics (the checkpointed
+    * frame's estimate is a default, so the planner alone would never
+    * pick the broadcast).
+    *
+    * Returns the candidates (a, b, aggs…), the checkpointed degree
+    * census (src, deg, dmin, dmax) and |V|.
+    */
+  private def wedgeCandidates(edges: DataFrame, wedgeBudget: Long,
+      op: String, valve: String, apex: (DataFrame, DataFrame) => DataFrame,
+      aggs: Column*): (DataFrame, DataFrame, Long) = {
+    val nb = edges.localCheckpoint(true)
+    val deg = nb.groupBy(col("src")).agg(count(lit(1)).as("deg"),
+        min(col("dst").cast("long")).as("dmin"),
+        max(col("dst").cast("long")).as("dmax"))
+      .localCheckpoint(true)
+    val r = deg.agg(
+      min(least(col("src").cast("long"), col("dmin"))),
+      max(greatest(col("src").cast("long"), col("dmax"))),
+      count(lit(1)), sum(col("deg")),
+      sum(expr("deg * (deg - 1) div 2"))).head
+    var nodes, edgeRows, wedges = 0L
+    if (!r.isNullAt(0)) {
+      val (mn, mx) = (r.getLong(0), r.getLong(1))
+      require(mn >= 0L && mx < 4294967296L,
+        s"$op packs pairs as a*2^32+b, which needs node " +
+          s"ids in [0, 2^32) — got [$mn, $mx]; remap ids first")
+      nodes = r.getLong(2)
+      edgeRows = r.getLong(3)
+      wedges = r.getLong(4)
+    }
+    requireWedgeBudget(wedges, wedgeBudget, op, valve)
+    val aggParts = math.max(
+      edges.sparkSession.sessionState.conf.numShufflePartitions,
+      math.min(4096L, wedges / 3000000L).toInt)
+    val side = apex(nb, deg)
+    val payload = side.columns.filterNot(Set("src", "a")).map(col).toSeq
+    val pairs = side
+      .join(nb.select(col("src"), col("dst").as("b")), "src")
+      .filter(col("a") < col("b"))
+      .select(((col("a") * lit(4294967296L) + col("b")).as("pk") +: payload): _*)
+      .repartition(aggParts, col("pk"))
+      .groupBy(col("pk"))
+      .agg(aggs.head, aggs.tail: _*)
+    val adjPacked = nb.filter(col("src") < col("dst"))
+      .select((col("src") * lit(4294967296L) + col("dst")).as("pk"))
+    val adjSide =
+      if (edgeRows <= 8000000L) broadcast(adjPacked) else adjPacked
+    val links = pairs.join(adjSide, Seq("pk"), "left_anti")
+      .select(Seq(expr("pk div 4294967296L").as("a"),
+          (col("pk") % lit(4294967296L)).as("b")) ++
+        pairs.columns.filter(_ != "pk").map(col): _*)
+    (links, deg, nodes)
+  }
+
   /** Gate: neighborhood-Jaccard link prediction, top 20. */
   def neighborJaccard(spark: SparkSession, dir: String): DataFrame =
     neighborJaccardOf(copurchaseEdges(spark, dir), topK = 20)
@@ -860,122 +968,33 @@ object Graph {
     * |N(a)∩N(b)| / |N(a)∪N(b)|, held exact in integer parts per
     * million — jac_ppm = (common·10⁶) div (deg(a)+deg(b)−common).
     * Common-neighbor counts come from apex-side wedge enumeration
-    * (each shared neighbor c contributes the (a, b) pair once from
-    * its own adjacency, a < b ordering dedups the unordered pair):
-    * map-side generation per apex partition, then one partial-agg'd
-    * count per pair. Unlike triangle counting, exact common-neighbor
-    * counting is intrinsically Σ C(deg, 2) over apexes — degree
-    * orientation cannot cap it because EVERY apex's wedges are the
-    * payload, not a closure witness; [[degrees]] is the published
-    * budget check (Σ C(deg,2) ≤ |E|·max-deg), and past that budget
-    * the scalable relaxation is neighborhood MinHash
-    * ([[MinHashLSH]] over adjacency lists), trading exactness for
-    * linear sketches — the same valve the dedup family documents.
-    * Candidates already adjacent are removed by one anti-join against
-    * the oriented edge set; prediction = highest-scoring new links.
+    * ([[wedgeCandidates]]: each shared neighbor c contributes the
+    * (a, b) pair once from its own adjacency, a < b ordering dedups
+    * the unordered pair), one count per pair. Unlike triangle
+    * counting, exact common-neighbor counting is intrinsically
+    * Σ C(deg, 2) over apexes — degree orientation cannot cap it
+    * because EVERY apex's wedges are the payload, not a closure
+    * witness; [[degrees]] is the published budget check
+    * (Σ C(deg,2) ≤ |E|·max-deg), and past that budget the scalable
+    * relaxation is neighborhood MinHash ([[neighborJaccardSketchOf]]),
+    * trading exactness for linear sketches — the same valve the dedup
+    * family documents. Prediction = highest-scoring new links.
     */
   def neighborJaccardOf(edges: DataFrame, topK: Int,
-      materialize: Boolean = true,
       wedgeBudget: Long = DefaultWedgeBudget): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    def cached(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    // ONE materialization: deg and both self-join sides run off this
-    // single checkpoint. Under AQE the checkpoint forgets the src
-    // clustering [[copurchaseEdges]] hands over, so the joins on it
-    // re-exchange the edge side — the r16 probe charged ~4 s of the
-    // old gate to the extra e-checkpoint + repartition + count passes
-    // this replaces.
-    val nb = cached(edges)
-    // min/max(dst) ride the SAME per-src aggregation pass the degree
-    // census pays, so the id-range guard below can bound BOTH
-    // endpoint domains with zero extra passes (r16 ADVICE: a caller
-    // violating the symmetric-edge contract could slip an
-    // out-of-range dst past a src-only check and silently collide
-    // packed keys)
-    val deg = cached(nb.groupBy($"src").agg(count(lit(1)).as("deg"),
-      min($"dst".cast("long")).as("dmin"),
-      max($"dst".cast("long")).as("dmax")))
-    // combined pre-flight — ONE node-sized aggregate over deg yields
-    // every runtime precondition and sizing knob:
-    // (1) id range: the single-long pair packing needs ids in
-    //     [0, 2³²) — out of range would COLLIDE keys (silently wrong
-    //     counts); BOTH src and dst domains are checked;
-    // (2) the wedge budget — EVERY apex's C(deg,2) wedges are this
-    //     operator's payload (orientation can't cap them), so past
-    //     the ceiling the guard names the sketch valve and throws;
-    // (3) |V| and |E| size the two small-side joins below.
-    var nodes, edgeRows, wedges = 0L
-    if (materialize) {
-      val r = deg.agg(
-        min(least($"src".cast("long"), $"dmin")),
-        max(greatest($"src".cast("long"), $"dmax")),
-        count(lit(1)), sum($"deg"),
-        sum(expr("deg * (deg - 1) div 2"))).head
-      if (!r.isNullAt(0)) {
-        val (mn, mx) = (r.getLong(0), r.getLong(1))
-        require(mn >= 0L && mx < 4294967296L,
-          s"neighborJaccardOf packs pairs as a*2^32+b, which needs node " +
-            s"ids in [0, 2^32) — got [$mn, $mx]; remap ids first")
-        nodes = r.getLong(2)
-        edgeRows = r.getLong(3)
-        wedges = r.getLong(4)
-      }
-      if (wedges > wedgeBudget) throw new IllegalStateException(
-        s"neighborJaccardOf: wedge stream is sum C(deg,2) = $wedges > " +
-          s"budget $wedgeBudget — the exact form is past-budget at this " +
-          "scale; use neighborJaccardSketchOf (adjacency-MinHash " +
-          "candidates + exact re-verify), or raise wedgeBudget " +
-          "explicitly if you have the cluster for it")
-    }
-    // wedges around each apex: both directions are present, so the
-    // apex's full neighborhood is its out-list; a < b emits each
-    // unordered candidate pair once per shared neighbor. Generation
-    // is the co-partitioned self-join (the triangles device); the
-    // a < b filter + pair packing run inside whole-stage codegen — no
-    // per-apex C(deg,2) array ever materializes (a 10⁶-wedge hub row
-    // would). Pairs travel PACKED into one long (a·2³² + b).
-    //
-    // The count itself is an explicit repartition on pk + aggregate,
-    // NOT a bare groupBy: candidate pairs barely repeat (sf0.1: 148 M
-    // wedges → 102 M distinct pairs), so map-side partial aggregation
-    // buys a 1.4× row cut while its per-map hash table holds the
-    // whole near-distinct key set — measured 41 s vs 15 s for the
-    // shuffle-raw-longs-then-aggregate-once shape (sf0.1, 32 cores;
-    // OPTIMIZATION_r16.md §1 "Graph family"). Partition count scales
-    // with the measured wedge stream (≥ session parallelism, ~3 M
-    // wedges per task) instead of being a local constant.
-    val aggParts = math.max(spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, wedges / 3000000L).toInt)
-    val common = nb.select($"src", $"dst".as("a"))
-      .join(nb.select($"src", $"dst".as("b")), "src")
-      .filter($"a" < $"b")
-      .select(($"a" * lit(4294967296L) + $"b").as("pk"))
-      .repartition(aggParts, $"pk")
-      .groupBy($"pk")
-      .agg(count(lit(1)).as("common"))
-    // adjacency exclusion on the SAME packed key: the candidate side
-    // keeps its hash(pk) layout from the aggregate (zero exchange on
-    // the 10⁸-row side; only the edge-sized side moves), and an edge
-    // set small enough to ship outright is broadcast — sized from the
-    // census, not guessed from plan statistics (the checkpointed
-    // frame's estimate is a default, so the planner alone would
-    // never pick the broadcast).
-    val adjPacked = nb.filter($"src" < $"dst")
-      .select(($"src" * lit(4294967296L) + $"dst").as("pk"))
-    val adjSide = if (materialize && edgeRows <= 8000000L)
-      broadcast(adjPacked) else adjPacked
-    val newLinks = common.join(adjSide, Seq("pk"), "left_anti")
-      .select(expr("pk div 4294967296L").as("a"),
-        ($"pk" % lit(4294967296L)).as("b"), $"common")
+    val (links, deg, nodes) = wedgeCandidates(edges, wedgeBudget,
+      "neighborJaccardOf", "neighborJaccardSketchOf (adjacency-MinHash " +
+        "candidates + exact re-verify)",
+      (nb, _) => nb.select($"src", $"dst".as("a")),
+      count(lit(1)).as("common"))
     // deg is node-sized: broadcast when the census says it fits
-    def degAs(k: String, v: String) =
-      deg.select($"src".as(k), $"deg".as(v))
-    def degSide(k: String, v: String) =
-      if (materialize && nodes <= 4000000L) broadcast(degAs(k, v))
-      else degAs(k, v)
-    val composed = newLinks
+    def degSide(k: String, v: String) = {
+      val d = deg.select($"src".as(k), $"deg".as(v))
+      if (nodes <= 4000000L) broadcast(d) else d
+    }
+    links
       .join(degSide("a", "da"), "a")
       .join(degSide("b", "db"), "b")
       .withColumn("jac_ppm",
@@ -983,11 +1002,7 @@ object Graph {
       .select($"a", $"b", $"common", $"jac_ppm")
       .orderBy($"jac_ppm".desc, $"a", $"b")
       .limit(topK)
-    if (!materialize) composed
-    else {
-      val out = composed.localCheckpoint(true)
-      out
-    }
+      .localCheckpoint(true)
   }
 
   /** Oracle: wedge self-join per apex + NOT EXISTS against the edge
@@ -1037,83 +1052,30 @@ object Graph {
     * BIGINT sum — bit-identical on any partition merge order, which
     * a raw double Σ 1/ln(deg) could not promise across engines.
     *
-    * Plan shape = [[neighborJaccardOf]]'s wedge stream with one
-    * twist: the apex's weight rides each adjacency row into the
-    * co-partitioned self-join (zero extra exchanges — deg is
-    * computed ON the same hash(src) layout), and the pair aggregate
-    * sums it instead of counting. Same Σ C(deg,2) intrinsic cost,
+    * Plan shape = [[wedgeCandidates]] with one twist: the apex's
+    * weight rides each adjacency row into the co-partitioned
+    * self-join (one checkpointed (src, dst, w) frame), and the pair
+    * aggregate sums it besides counting. Same Σ C(deg,2) intrinsic cost,
     * same wedge-budget guard, same single-long pair packing; past
     * budget the guard names [[adamicAdarSketchOf]] — the MinHash
     * candidate stage with the SAME integer AA re-score on candidates.
     */
   def adamicAdarOf(edges: DataFrame, topK: Int,
-      materialize: Boolean = true,
       wedgeBudget: Long = DefaultWedgeBudget): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    def cached(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint(true) else df
-    // single checkpoint of the already-src-clustered edge frame (see
-    // [[neighborJaccardOf]] — same one-materialization rework)
-    val nb = cached(edges)
-    // deg + weight on the hash(src) layout the self-join reuses;
-    // min/max(dst) ride the same pass for the two-sided id-range
-    // guard ([[neighborJaccardOf]] rationale)
-    val deg = nb.groupBy($"src").agg(count(lit(1)).as("deg"),
-        min($"dst".cast("long")).as("dmin"),
-        max($"dst".cast("long")).as("dmax"))
-      .withColumn("w", expr(
-        "CASE WHEN deg >= 2 THEN CAST(round(1000000.0 / ln(deg)) AS BIGINT) " +
-          "ELSE CAST(0 AS BIGINT) END"))
-    // combined pre-flight, one node-sized aggregate (id range for the
-    // pair packing — both endpoint domains — wedge budget, |E| for
-    // the anti-join sizing) — [[neighborJaccardOf]] documents each
-    var edgeRows, wedges = 0L
-    if (materialize) {
-      val r = deg.agg(
-        min(least($"src".cast("long"), $"dmin")),
-        max(greatest($"src".cast("long"), $"dmax")),
-        sum($"deg"), sum(expr("deg * (deg - 1) div 2"))).head
-      if (!r.isNullAt(0)) {
-        val (mn, mx) = (r.getLong(0), r.getLong(1))
-        require(mn >= 0L && mx < 4294967296L,
-          s"adamicAdarOf packs pairs as a*2^32+b, which needs node " +
-            s"ids in [0, 2^32) — got [$mn, $mx]; remap ids first")
-        edgeRows = r.getLong(2)
-        wedges = r.getLong(3)
-      }
-      if (wedges > wedgeBudget) throw new IllegalStateException(
-        s"adamicAdarOf: wedge stream is sum C(deg,2) = $wedges > budget " +
-          s"$wedgeBudget — the exact form is past-budget at this scale; " +
-          "use adamicAdarSketchOf (adjacency-MinHash candidates + exact " +
-          "integer micro-unit AA re-score), or raise wedgeBudget " +
-          "explicitly if you have the cluster for it")
-    }
-    val nbw = cached(nb.join(deg.select($"src", $"w"), "src"))
-    // wedge count+sum as repartition(pk) + single aggregate — the
-    // near-distinct candidate keys make map-side partial aggregation
-    // a net loss; [[neighborJaccardOf]] carries the measurements
-    val aggParts = math.max(spark.sessionState.conf.numShufflePartitions,
-      math.min(4096L, wedges / 3000000L).toInt)
-    val scored = nbw.select($"src", $"w", $"dst".as("a"))
-      .join(nb.select($"src", $"dst".as("b")), "src")
-      .filter($"a" < $"b")
-      .select(($"a" * lit(4294967296L) + $"b").as("pk"), $"w")
-      .repartition(aggParts, $"pk")
-      .groupBy($"pk")
-      .agg(count(lit(1)).as("common"), sum($"w").as("aa_micro"))
-    // adjacency exclusion on the packed key: candidate side keeps its
-    // hash(pk) layout (zero exchange), small edge sets broadcast
-    val adjPacked = nb.filter($"src" < $"dst")
-      .select(($"src" * lit(4294967296L) + $"dst").as("pk"))
-    val adjSide = if (materialize && edgeRows <= 8000000L)
-      broadcast(adjPacked) else adjPacked
-    val composed = scored.join(adjSide, Seq("pk"), "left_anti")
-      .select(expr("pk div 4294967296L").as("a"),
-        ($"pk" % lit(4294967296L)).as("b"), $"common", $"aa_micro")
-      .orderBy($"aa_micro".desc, $"a", $"b")
+    val (links, _, _) = wedgeCandidates(edges, wedgeBudget,
+      "adamicAdarOf", "adamicAdarSketchOf (adjacency-MinHash candidates " +
+        "+ exact integer micro-unit AA re-score)",
+      (nb, deg) => nb.join(deg.select($"src", expr(
+          "CASE WHEN deg >= 2 THEN CAST(round(1000000.0 / ln(deg)) AS BIGINT) " +
+            "ELSE CAST(0 AS BIGINT) END").as("w")), "src")
+        .localCheckpoint(true)
+        .select($"src", $"w", $"dst".as("a")),
+      count(lit(1)).as("common"), sum($"w").as("aa_micro"))
+    links.orderBy($"aa_micro".desc, $"a", $"b")
       .limit(topK)
-    if (!materialize) composed else composed.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** Oracle: the same candidate algebra with the apex weight spelled
@@ -1162,7 +1124,7 @@ object Graph {
     * score behind related-items / node-similarity features): teleport
     * returns to the SEED SET, not the uniform distribution, so rank
     * concentrates around the seeds. Same integer-unit exactness
-    * device as [[pageRankOf]] — seeds start at 10⁶ micro-units,
+    * device as [[pageRankWeightedOf]] — seeds start at 10⁶ micro-units,
     * non-seeds at 0, and the restart mass (150 000) is added to seeds
     * only: r_{t+1}(v) = (seed ? 150000 : 0) + (850·Σ r_t(u) div
     * outdeg(u)) div 1000 — bit-exact on any merge order. Plan shape
@@ -1358,8 +1320,8 @@ object Graph {
       if (wedgeSum(deg, "deg") <= wedgeBudget) eIn
       else {
         val peeled = coreRestrict(eIn, k - 1)
-        requireWedgeBudget(
-          peeled.groupBy($"src").agg(count(lit(1)).as("deg")), "deg",
+        requireWedgeBudget(wedgeSum(
+          peeled.groupBy($"src").agg(count(lit(1)).as("deg")), "deg"),
           wedgeBudget, "kTrussOf",
           s"a larger explicit wedgeBudget — the ${k - 1}-core pre-peel " +
             "already ran and the surviving core is still past budget")
@@ -1801,26 +1763,38 @@ object Graph {
         .select($"p_partkey".as("node"), $"p_brand".as("community")))
   }
 
+  /** The census [[modularityOf]] and [[conductanceOf]] share over a
+    * (src < dst) edge frame and a (node, community) labeling: the
+    * undirected edge count m, the edges with both endpoint labels
+    * (src, dst, ca, cb) — the edge frame joins the labels BY KEY
+    * twice — and the per-community (community, n_nodes, degree_sum).
+    * The edges are checkpointed once; both frames read that copy.
+    */
+  private def communityCensus(edges: DataFrame,
+      labels: DataFrame): (Long, DataFrame, DataFrame) = {
+    val und = edges.localCheckpoint(true)
+    val m = und.count()
+    val labeled = und
+      .join(labels.select(col("node").as("src"), col("community").as("ca")), "src")
+      .join(labels.select(col("node").as("dst"), col("community").as("cb")), "dst")
+    val degree = und.select(explode(array(col("src"), col("dst"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .join(labels, "node")
+      .groupBy(col("community"))
+      .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("degree_sum"))
+    (m, labeled, degree)
+  }
+
   /** Core over any (src < dst) edge frame and (node, community)
     * labeling — see [[modularityByBrand]] for the contract.
     */
   def modularityOf(edges: DataFrame, labels: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val brand = labels
-    val und = edges.localCheckpoint(true)
-    val m = und.count()
-    val labeled = und
-      .join(brand.select($"node".as("src"), $"community".as("ca")), "src")
-      .join(brand.select($"node".as("dst"), $"community".as("cb")), "dst")
+    val (m, labeled, degree) = communityCensus(edges, labels)
     val intra = labeled.filter($"ca" === $"cb")
       .groupBy($"ca".as("community"))
       .agg(count(lit(1)).as("intra_edges"))
-    val degree = und.select(explode(array($"src", $"dst")).as("node"))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-      .join(brand, "node")
-      .groupBy($"community")
-      .agg(count(lit(1)).as("n_nodes"), sum($"deg").as("degree_sum"))
     degree.join(intra, Seq("community"), "left")
       .withColumn("intra_edges", coalesce($"intra_edges", lit(0L)))
       .withColumn("q_contrib", round(
@@ -1892,19 +1866,10 @@ object Graph {
   def conductanceOf(edges: DataFrame, labels: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = edges.localCheckpoint(true)
-    val m = und.count()
-    val labeled = und
-      .join(labels.select($"node".as("src"), $"community".as("ca")), "src")
-      .join(labels.select($"node".as("dst"), $"community".as("cb")), "dst")
+    val (m, labeled, degree) = communityCensus(edges, labels)
     val cut = labeled.filter($"ca" =!= $"cb")
       .select(explode(array($"ca", $"cb")).as("community"))
       .groupBy($"community").agg(count(lit(1)).as("cut_edges"))
-    val degree = und.select(explode(array($"src", $"dst")).as("node"))
-      .groupBy($"node").agg(count(lit(1)).as("deg"))
-      .join(labels, "node")
-      .groupBy($"community")
-      .agg(count(lit(1)).as("n_nodes"), sum($"deg").as("degree_sum"))
     degree.join(cut, Seq("community"), "left")
       .withColumn("cut_edges", coalesce($"cut_edges", lit(0L)))
       // a boundary-less community reads 0 (the whole-graph community
@@ -2043,7 +2008,7 @@ object Graph {
             .otherwise(expr("(raw * 1000000L) div mx")).as(out))
         .localCheckpoint(true)
     // SHUFFLE_HASH on the node-sized score side per the
-    // [[pageRankOf]] rationale.
+    // [[pageRankWeightedOf]] rationale.
     for (_ <- 1 to iters) {
       val aRaw = e.join(h.hint("shuffle_hash"), "u")
         .groupBy($"p").agg(sum($"hs").as("raw"))
@@ -2110,7 +2075,7 @@ object Graph {
     // dst-keyed join re-exchanged the full edge list every iteration)
     // and the sum groups by dst with map-side partial aggregation.
     // SHUFFLE_HASH on the node-sized score side skips the sort-merge
-    // re-sort per iteration (the [[pageRankOf]] rationale). The
+    // re-sort per iteration (the [[pageRankWeightedOf]] rationale). The
     // renormalization max rides a one-row broadcast cross join (the
     // [[hitsOf]] device) instead of a mid-loop driver read, and only
     // `raw` is checkpointed per iteration — the normalized projection
@@ -2252,7 +2217,7 @@ object Graph {
     // that ranks the adjacency (same partitioning, no extra
     // exchange), so each step is a single join against the ranked
     // adjacency with the hash-mod pick evaluated in the join
-    // condition. SHUFFLE_HASH on the walk side ([[pageRankOf]]
+    // condition. SHUFFLE_HASH on the walk side ([[pageRankWeightedOf]]
     // rationale — the walk frame is seed-sized, the adjacency is
     // edge-sized).
     val w = org.apache.spark.sql.expressions.Window.partitionBy($"src")
@@ -2332,7 +2297,7 @@ object Graph {
     * src-partitioned edge frame: neighbor-label counting on
     * (src, label) and a lexicographic struct-max argmax, both
     * reusing the hash(src) partitioning, with scalar (node, label)
-    * rows as the only per-round shuffle payload (the [[pageRankOf]]
+    * rows as the only per-round shuffle payload (the [[pageRankWeightedOf]]
     * loop discipline: localCheckpoint per round keeps lineage O(1)).
     * Like every operator on this graph, the budget guard is the
     * [[degrees]] census — label counting is Σ deg = 2|E| per round,
@@ -2349,9 +2314,9 @@ object Graph {
     // dst-keyed join re-exchanged the full edge list every round)
     // and the (dst, label) census exchanges the partially-aggregated
     // pair stream instead. SHUFFLE_HASH on the node-sized label side
-    // skips the per-round edge re-sort ([[pageRankOf]] rationale).
+    // skips the per-round edge re-sort ([[pageRankWeightedOf]] rationale).
     // No per-round checkpoint: the rounds form a straight chain
-    // consumed once, exactly like the [[pageRankOf]] loop — one job
+    // consumed once, exactly like the [[pageRankWeightedOf]] loop — one job
     // executes all rounds, instead of paying a checkpoint job +
     // driver gap per round.
     var labels = e.select($"src".as("node")).distinct()
@@ -2453,8 +2418,7 @@ object Graph {
     import spark.implicits._
     require(hops >= 2, s"hops=$hops: need at least 2 for any interior node")
     val e = edges.localCheckpoint(true)
-    val seeds = e.select($"src".as("node")).distinct()
-      .filter($"node" % seedMod === 0)
+    val seeds = seedNodes(e, seedMod)
       .select($"node".as("s"), $"node", lit(1L).as("sigma"))
       .localCheckpoint(true)
     // forward: levels(l) = (s, node, sigma) at BFS distance l from s.
@@ -2468,7 +2432,7 @@ object Graph {
     levels(0) = seeds
     var vis = seeds.select($"s", $"node")
     for (l <- 1 to hops) {
-      // SHJ-hinted frontier join + lazy vis union (see [[harmonicOf]])
+      // SHJ-hinted frontier join + lazy vis union (see [[seededBfs]])
       levels(l) = e.join(levels(l - 1).hint("shuffle_hash"),
           $"src" === $"node")
         .select($"s", $"dst", $"sigma")
@@ -2584,17 +2548,11 @@ object Graph {
     * bounded horizon is what a 100 TB graph can afford anyway (the
     * far tail contributes ≤ 1/(hops+1) each).
     *
-    * Exactness: the per-level BFS frontier IS the distance (first
-    * time a (seed, node) pair appears = shortest distance, the
-    * visited anti-join guarantees it), so h_micro(v) =
-    * Σ_l |{s: d(s,v) = l}| · round(10⁶/l) — counts are exact
+    * Exactness: the [[seededBfs]] level IS the distance, so h_micro(v)
+    * = Σ_l |{s: d(s,v) = l}| · round(10⁶/l) — counts are exact
     * BIGINTs, the per-level weights are CONSTANTS, no fp anywhere.
-    *
-    * Scale shape: identical to the betweenness forward pass minus σ
-    * — edges checkpointed once, one frontier join + partial-agg'd
-    * distinct per level; each join re-exchanges the edge side with
-    * the (s, node) scalars (under AQE the checkpoint forgets its
-    * partitioning on src), lineage truncated per level.
+    * Scale shape: edges checkpointed once, then the [[seededBfs]]
+    * levels; this operator adds only the final per-node sum.
     */
   def harmonicOf(edges: DataFrame, seedMod: Long, hops: Int,
       topK: Int): DataFrame = {
@@ -2602,35 +2560,11 @@ object Graph {
     import spark.implicits._
     require(hops >= 1, s"hops=$hops: need at least 1 level")
     val e = edges.select($"src", $"dst").localCheckpoint(true)
-    val seeds = e.select($"src".as("node")).distinct()
-      .filter($"node" % seedMod === 0)
-      .select($"node".as("s"), $"node")
-      .localCheckpoint(true)
-    var frontier = seeds
-    var vis = seeds
-    var acc: DataFrame = null
-    for (l <- 1 to hops) {
-      // distinct BEFORE the visited anti-join (aggregate before you
-      // shuffle): the raw frontier×edge stream repeats each (s, dst)
-      // ~deg times; collapsing it map-side first means the anti-join
-      // exchanges the collapsed set, not the 10⁸-row raw stream —
-      // identical result, the anti-join drops whole keys either way.
-      // SHUFFLE_HASH on the frontier side of the edge join (the
-      // [[pageRankOf]] rationale — no edge re-sort per level); `vis`
-      // stays a LAZY union of the already-checkpointed level frames,
-      // so it costs no checkpoint job of its own (r17: was one per
-      // level).
-      frontier = e.join(frontier.hint("shuffle_hash"), $"src" === $"node")
-        .select($"s", $"dst".as("node")).distinct()
-        .join(vis.select($"s".as("vs"), $"node".as("vn")),
-          $"s" === $"vs" && $"node" === $"vn", "left_anti")
-        .localCheckpoint(true)
-      vis = vis.unionByName(frontier)
-      val lvl = frontier.withColumn("w",
-        lit(math.round(1.0e6 / l)))
-      acc = if (acc == null) lvl else acc.unionByName(lvl)
-    }
-    acc.groupBy($"node").agg(sum($"w").as("h_micro"))
+    val levels = seededBfs(e, seedNodes(e, seedMod)
+      .select($"node".as("s"), $"node"), hops)
+    (1 to hops).map(l => levels(l).withColumn("w", lit(math.round(1.0e6 / l))))
+      .reduce(_ unionByName _)
+      .groupBy($"node").agg(sum($"w").as("h_micro"))
       .orderBy($"h_micro".desc, $"node")
       .limit(topK)
   }
@@ -2648,12 +2582,11 @@ object Graph {
     * and harmonic as the two principled closeness forms — harmonic is
     * 33n, this is its companion so a reference user gets both).
     *
-    * Exactness: identical frontier-BFS to [[harmonicOf]] — the first
-    * level a (seed, node) pair appears IS its distance, so reached =
-    * COUNT and Σd = SUM of small integer levels; lin_micro =
-    * reached²·10⁶ div Σd by integer division (Σd ≥ reached ≥ 1 for
-    * every emitted node — no zero guard needed). Same budget knobs
-    * (seedMod, hops), same per-level truncated-lineage scale shape.
+    * Exactness: the same [[seededBfs]] levels as [[harmonicOf]] — the
+    * level IS the distance, so reached = COUNT and Σd = SUM of small
+    * integer levels; lin_micro = reached²·10⁶ div Σd by integer
+    * division (Σd ≥ reached ≥ 1 for every emitted node — no zero
+    * guard needed). Same budget knobs (seedMod, hops).
     */
   def linClosenessOf(edges: DataFrame, seedMod: Long, hops: Int,
       topK: Int): DataFrame = {
@@ -2661,26 +2594,11 @@ object Graph {
     import spark.implicits._
     require(hops >= 1, s"hops=$hops: need at least 1 level")
     val e = edges.select($"src", $"dst").localCheckpoint(true)
-    val seeds = e.select($"src".as("node")).distinct()
-      .filter($"node" % seedMod === 0)
-      .select($"node".as("s"), $"node")
-      .localCheckpoint(true)
-    var frontier = seeds
-    var vis = seeds
-    var acc: DataFrame = null
-    for (l <- 1 to hops) {
-      // distinct before the anti-join, SHJ-hinted frontier join,
-      // lazy vis union — see [[harmonicOf]]
-      frontier = e.join(frontier.hint("shuffle_hash"), $"src" === $"node")
-        .select($"s", $"dst".as("node")).distinct()
-        .join(vis.select($"s".as("vs"), $"node".as("vn")),
-          $"s" === $"vs" && $"node" === $"vn", "left_anti")
-        .localCheckpoint(true)
-      vis = vis.unionByName(frontier)
-      val lvl = frontier.withColumn("d", lit(l.toLong))
-      acc = if (acc == null) lvl else acc.unionByName(lvl)
-    }
-    acc.groupBy($"node")
+    val levels = seededBfs(e, seedNodes(e, seedMod)
+      .select($"node".as("s"), $"node"), hops)
+    (1 to hops).map(l => levels(l).withColumn("d", lit(l.toLong)))
+      .reduce(_ unionByName _)
+      .groupBy($"node")
       .agg(count(lit(1)).as("reached"), sum($"d").as("sum_d"))
       .select($"node", $"reached", $"sum_d",
         expr("(reached * reached * 1000000L) div sum_d").as("lin_micro"))

@@ -218,10 +218,11 @@ object Search {
     * carry. Graph: adjacent surviving tokens (length ≥ 4, the
     * deterministic content-word stand-in for the paper's POS filter)
     * within a document, undirected, deduplicated. The ranking is
-    * [[Graph.pageRankOf]] verbatim — the same integer micro-unit
-    * fixpoint, so the oracle is the same 5-stage unrolled-CTE
-    * aggregate chain (aggregate-only CTEs: linear re-evaluation
-    * under DuckDB inlining, unlike the banned window-bearing class).
+    * [[Graph.pageRankWeightedOf]] with unit weights — the same
+    * integer micro-unit fixpoint, so the oracle is the same 5-stage
+    * unrolled-CTE aggregate chain (aggregate-only CTEs: linear
+    * re-evaluation under DuckDB inlining, unlike the banned
+    * window-bearing class).
     *
     * Scale shape: the pair stream is one doc-partitioned lead window
     * over the postings frame (corpus-linear, never a self-join);
@@ -243,7 +244,7 @@ object Search {
       .distinct()
     val edges = adj.select($"a".as("src"), $"b".as("dst"))
       .unionByName(adj.select($"b".as("src"), $"a".as("dst")))
-    Graph.pageRankOf(edges, iters, topK)
+    Graph.pageRankWeightedOf(edges.withColumn("w", lit(1L)), iters, topK)
   }
 
   def textrankKeywordsSql(iters: Int = 5, topK: Int = 20,

@@ -759,39 +759,6 @@ class ManifestTable(spark: SparkSession, root: String) {
     }
   }
 
-  /** Executor-side Bloom probe for the 10⁴⁺-segment regime:
-    * [[pointCandidates]] opens every sidecar sequentially on the
-    * driver — fine to a few thousand segments, a serial metadata
-    * bottleneck past that. Here the zone-map prefilter still runs
-    * driver-side (pure in-memory manifest stats), then the surviving
-    * segment PATHS are parallelized and each task opens + probes its
-    * own sidecars where the data is — the probe becomes a metadata
-    * job whose wall is max(segments/parallelism · per-probe IO), not
-    * the serial sum. Identical arithmetic (the probe helper is the
-    * same static function), so the candidate set is identical by
-    * construction; the spec pins it.
-    */
-  def pointCandidatesDistributed(c: String, value: Long,
-      parallelism: Int = 64): Seq[Segment] = {
-    val (_, segs) = liveSegments.getOrElse(
-      throw new java.io.FileNotFoundException(s"no committed version under $root"))
-    val zoneHit = segs.filter(_.stats.get(c).forall {
-      case (mn, mx) => value >= mn && value <= mx })
-    if (zoneHit.isEmpty) return Nil
-    // Configuration is a Writable — SerializableWritable ships it to
-    // tasks so executor-side FileSystem resolution matches the driver
-    val confW = new org.apache.spark.SerializableWritable(
-      spark.sparkContext.hadoopConfiguration)
-    val colName = c
-    val k = BloomK
-    val hit = spark.sparkContext
-      .parallelize(zoneHit.map(_.dir.toString),
-        math.max(1, math.min(parallelism, zoneHit.size)))
-      .filter(p => ManifestTable.probeSidecar(p, colName, value, k, confW.value))
-      .collect().toSet
-    zoneHit.filter(s => hit.contains(s.dir.toString))
-  }
-
   /** Point-lookup read: scan only [[pointCandidates]], then apply the
     * row-level equality — the payoff path for "fetch one key out of
     * a 10⁵-segment table" where zone maps alone prune nothing.

@@ -504,11 +504,14 @@ object GraphCrossCheck {
         rows(graft.operators.Graph.betweenness(spark, dir)), want)
     }
 
-    // ── harmonic centrality (same sampled seeds + 3-hop BFS,
-    //    constant per-level weights 10⁶/l) ──
+    // ── harmonic centrality and Lin closeness (same sampled seeds +
+    //    3-hop BFS; harmonic weighs level l by the constant 10⁶/l,
+    //    Lin is reached²·10⁶ div Σd) ──
     {
       val dedup = adj.map { case (u, vs) => u -> vs.distinct.toArray }
       val h = mutable.HashMap.empty[Long, Long]
+      val reached = mutable.HashMap.empty[Long, Long]
+      val sumD = mutable.HashMap.empty[Long, Long]
       val w = Array(0L, 1000000L, 500000L, 333333L)
       nodes.filter(_ % 499 == 0).foreach { s =>
         val dist = mutable.HashMap(s -> 0)
@@ -521,6 +524,8 @@ object GraphCrossCheck {
           next.foreach { v =>
             dist(v) = l
             h(v) = h.getOrElse(v, 0L) + w(l)
+            reached(v) = reached.getOrElse(v, 0L) + 1L
+            sumD(v) = sumD.getOrElse(v, 0L) + l
           }
           frontier = next.toSeq
         }
@@ -529,6 +534,12 @@ object GraphCrossCheck {
         .map { case (n, s) => Seq(n, s) }
       check("graph_harmonic",
         rows(graft.operators.Graph.harmonic(spark, dir)), want)
+      val lin = reached.toSeq.map { case (n, r) =>
+        (n, r, sumD(n), r * r * 1000000L / sumD(n)) }
+      check("graph_closeness",
+        rows(graft.operators.Graph.closeness(spark, dir)),
+        lin.sortBy { case (n, _, _, l) => (-l, n) }.take(20)
+          .map { case (n, r, d, l) => Seq(n, r, d, l) })
     }
 
     // ── HITS on the bipartite customer→part graph (3 iters) ──

@@ -17,9 +17,10 @@ class GraphSpec extends SparkSpec {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 2L), // triangle 2-3-4 with tail 1
       (5L, 6L), (5L, 7L), (5L, 8L)) // star at 5
     val edges = und.flatMap { case (a, b) => Seq((a, b), (b, a)) }
-    val got = Graph.pageRankOf(
+    val got = Graph.pageRankWeightedOf(
         spark.createDataFrame(
-          spark.sparkContext.parallelize(edges, 4)).toDF("src", "dst"),
+          spark.sparkContext.parallelize(edges, 4)).toDF("src", "dst")
+          .withColumn("w", lit(1L)),
         iters = 5, topK = 100)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
@@ -314,6 +315,19 @@ class GraphSpec extends SparkSpec {
           .toDF("src", "dst"), seedMod = 10L, hops = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq == Seq((0L, 1L, 10L), (1L, 2L, 3L)), s"got ${got.toSeq}")
+  }
+
+  test("kHop with overlapping seed frontiers counts each node once, at its minimum hop") {
+    // path 10—1—2—20 with seedMod 10: seeds 10 and 20 reach 1 and 2
+    // from both sides (1 is 1 hop from 10 and 2 from 20, 2 the other
+    // way round); a per-seed BFS would count each of them twice
+    val und = Seq((10L, 1L), (1L, 2L), (2L, 20L))
+    val got = Graph.kHopOf(
+        spark.createDataFrame(
+          spark.sparkContext.parallelize(bothDirs(und), 3))
+          .toDF("src", "dst"), seedMod = 10L, hops = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.toSeq == Seq((0L, 2L, 30L), (1L, 2L, 3L)), s"got ${got.toSeq}")
   }
 
   test("weighted ranks equal a sequential weighted re-derivation; weight skew shifts rank") {

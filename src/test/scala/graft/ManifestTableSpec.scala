@@ -430,46 +430,6 @@ class ManifestTableSpec extends SparkSpec {
     assert(src.dropBranchRef(br2Root) == 1)
   }
 
-  test("distributed bloom probe ≡ driver-side probe on a 10k-segment synthetic manifest") {
-    // the 10⁵-segment regime: pointCandidates opens sidecars serially
-    // on the driver; pointCandidatesDistributed must produce the
-    // IDENTICAL candidate set from executor-side probes. Segments are
-    // synthetic (dir + sidecar only — the probe path never opens
-    // parquet), each containing exactly key i.
-    val root = java.nio.file.Files.createTempDirectory("manifest_blm")
-      .toString + "/t"
-    val t = new ManifestTable(spark, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m = 16381L
-    val n = 10000
-    val segs = (0 until n).map { i =>
-      val dir = new org.apache.hadoop.fs.Path(rootPath, f"v00000001-syn$i%05d")
-      fs.mkdirs(dir)
-      val bits = new java.util.BitSet(m.toInt)
-      ManifestTable.bloomPositions(i.toLong, m, 7).foreach(bits.set)
-      val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_bloom.k"), true)
-      try {
-        out.write(java.nio.ByteBuffer.allocate(8).putLong(m).array())
-        out.write(bits.toByteArray)
-      } finally out.close()
-      t.Segment(dir, Map.empty)
-    }
-    t.commit(1L, segs, ownStaged = Nil)
-    val t0 = System.nanoTime()
-    val driver = t.pointCandidates("k", 4242L).map(_.dir.getName).toSet
-    val t1 = System.nanoTime()
-    val dist = t.pointCandidatesDistributed("k", 4242L)
-      .map(_.dir.getName).toSet
-    val t2 = System.nanoTime()
-    info(f"driver probe ${(t1 - t0) / 1e9}%.2fs, distributed ${(t2 - t1) / 1e9}%.2fs over $n segments")
-    assert(dist == driver, s"probe paths disagree: " +
-      s"dist-only=${(dist -- driver).take(3)} drv-only=${(driver -- dist).take(3)}")
-    // exactly segment 4242 plus (rare, deterministic) false positives
-    assert(dist.contains("v00000001-syn04242"))
-    assert(dist.size <= 5, s"FP rate collapsed: ${dist.size} of $n candidates")
-  }
-
   test("MoR delete: zero rewrite, read subtracts keys, re-append resurrects, compact folds dvs in") {
     import spark.implicits._
     val t = freshTable()

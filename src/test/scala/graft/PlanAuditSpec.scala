@@ -427,22 +427,41 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("graph_neighbor_jaccard: neighbor arrays never cross an exchange — wedges generate map-side") {
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graftinternal.PlanBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // audit the plan the gate runs: its final localCheckpoint, which
+    // Dataset.checkpoint reports to execution listeners as an action
+    val checkpoints =
+      new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpoints.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.listenerManager.register(listener)
     try {
-      // materialize=false: audit the composed plan, not the checkpoint
-      val shuffles = graft.operators.Graph
-        .neighborJaccardOf(graft.operators.Graph.copurchaseEdges(spark, SF),
-          topK = 20, materialize = false)
-        .queryExecution.executedPlan.collect {
-          case e: ShuffleExchangeExec => e.output
-        }
-      assert(shuffles.nonEmpty, "expected exchanges in the jaccard plan")
-      val offenders = shuffles.filter(_.exists(
-        _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]))
-      assert(offenders.isEmpty,
-        s"adjacency arrays in shuffle exchanges: ${offenders.map(_.map(_.name))}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      graft.operators.Graph.neighborJaccardOf(
+        graft.operators.Graph.copurchaseEdges(spark, SF), topK = 20)
+      PlanBridge.drainListeners(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    import scala.jdk.CollectionConverters._
+    assert(!checkpoints.isEmpty, "no localCheckpoint reached the listener")
+    val shuffles = checkpoints.asScala.last.executedPlan.collect {
+      case e: ShuffleExchangeExec => e.output
+    }
+    assert(shuffles.nonEmpty, "expected exchanges in the jaccard plan")
+    val offenders = shuffles.filter(_.exists(
+      _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]))
+    assert(offenders.isEmpty,
+      s"adjacency arrays in shuffle exchanges: ${offenders.map(_.map(_.name))}")
   }
 
   test("q7_volume_shipping: metadata dims broadcast, orders-customer keyed (never a cartesian), date pushed") {
