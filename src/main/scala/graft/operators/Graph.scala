@@ -1053,8 +1053,8 @@ object Graph {
     * a raw double Σ 1/ln(deg) could not promise across engines.
     *
     * Plan shape = [[wedgeCandidates]] with one twist: the apex's
-    * weight rides each adjacency row into the co-partitioned
-    * self-join (one checkpointed (src, dst, w) frame), and the pair
+    * weight, joined from the checkpointed degree census (node-sized),
+    * rides each adjacency row into the self-join, and the pair
     * aggregate sums it besides counting. Same Σ C(deg,2) intrinsic cost,
     * same wedge-budget guard, same single-long pair packing; past
     * budget the guard names [[adamicAdarSketchOf]] — the MinHash
@@ -1070,7 +1070,6 @@ object Graph {
       (nb, deg) => nb.join(deg.select($"src", expr(
           "CASE WHEN deg >= 2 THEN CAST(round(1000000.0 / ln(deg)) AS BIGINT) " +
             "ELSE CAST(0 AS BIGINT) END").as("w")), "src")
-        .localCheckpoint(true)
         .select($"src", $"w", $"dst".as("a")),
       count(lit(1)).as("common"), sum($"w").as("aa_micro"))
     links.orderBy($"aa_micro".desc, $"a", $"b")

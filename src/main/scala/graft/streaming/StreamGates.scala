@@ -1,21 +1,27 @@
 package graft.streaming
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.LongType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Driver-verifiable STREAMING gates (r13 verdict item 3): each gate
   * runs a real Structured Streaming query over the events parquet —
   * file source, micro-batches, watermark/state machinery live — to
-  * completion inside the gate function, then returns the memory
-  * sink's contents so the driver hashes the STREAM's output against
-  * the batch-twin DuckDB oracle. This upgrades three streaming rows
+  * completion inside the gate function, then returns the sink's
+  * contents so the board hashes the STREAM's output against the
+  * batch-twin DuckDB oracle. This upgrades the 15 streaming rows below
   * from spec-only equivalence to board-verified equivalence: the
   * stream itself (not just the shared operator code) is in the
   * compared path.
+  *
+  * Every gate runs through one lifecycle, [[streamGate]]: the child
+  * session, one scratch scope for every directory, the watch-directory
+  * fill, the run-to-completion with the sentinel walk, the one result
+  * checkpoint and the clean-up. A gate body holds only its operator
+  * call and its post-filter or sort.
   *
   * Scale notes: the file source reads the same parquet the batch
   * twin reads (pruned columns only); no driver-side collect anywhere
@@ -24,10 +30,6 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * per-invocation unique (Verify runs gates concurrently).
   */
 object StreamGates {
-
-  private val seq = new java.util.concurrent.atomic.AtomicLong()
-  private def sinkName(tag: String): String =
-    s"sg_${tag}_${java.util.UUID.randomUUID.toString.replace("-", "")}"
 
   /** Session the gate's streaming query runs on: a CHILD session with
     * the stateful-stream state-partition count set explicitly. The
@@ -56,137 +58,186 @@ object StreamGates {
     s
   }
 
-  /** Materialize the sink's contents and DROP the memory-sink view:
-    * the memory sink pins its whole collected output on the driver
-    * for the view's lifetime, and a bench board runs every gate 3× —
-    * localCheckpoint blocks, by contrast, are GC-reaped once the
-    * returned frame goes unreferenced (the repo-wide checkpoint
-    * rationale). Also deletes the gate's temp watch dirs: the stream
-    * is stopped and the result no longer reads files.
+  /** The one stream-gate lifecycle: runs `body` on a [[Gate]] over
+    * the stream session, takes the single `localCheckpoint(true)` of
+    * the frame it returns, and then — also when the body throws —
+    * drops the gate's memory-sink views and deletes its scratch scope.
+    * The result is checkpointed before anything is released, so the
+    * body may return a frame that still reads the sink's files. The
+    * checkpoint is the only RDD the lifecycle persists; its blocks
+    * live until the caller unpersists them (Bench does, by handle,
+    * after each gate) or the returned frame is garbage-collected.
     */
-  private def finish(spark: SparkSession, sink: String,
-      result: org.apache.spark.sql.DataFrame,
-      tempDirs: Seq[Path] = Nil): org.apache.spark.sql.DataFrame = {
-    val out = result.localCheckpoint(true)
-    spark.catalog.dropTempView(sink)
-    tempDirs.foreach(deleteRecursively)
-    out
+  private def streamGate(spark0: SparkSession, dir: String, tag: String,
+      paced: Boolean = false, minRanges: Int = 1)(
+      body: Gate => DataFrame): DataFrame = {
+    val g = new Gate(streamSession(spark0), dir, tag, paced, minRanges)
+    try body(g).localCheckpoint(true) finally g.close()
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val it = Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+  /** One gate run's resources. Every directory it touches lives under
+    * one scratch scope (a temp directory named after `tag`): the watch
+    * directory, sink outputs, checkpoints, manifest roots and the
+    * range/sentinel staging. The watch directory is filled on first
+    * use, one of two ways: `paced` gates replay [[copyTimeOrdered]]'s
+    * time-ordered ranges one file per trigger; the others stream a
+    * plain [[copyParquet]] of the events table.
+    */
+  private final class Gate(val spark: SparkSession, dir: String,
+      tag: String, paced: Boolean, minRanges: Int) {
+    private val src = s"$dir/events.parquet"
+    private val scope = Files.createTempDirectory(tag)
+    private val views = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    /** A fresh directory inside the gate's scratch scope. */
+    def scratch(name: String): Path = Files.createTempDirectory(scope, name)
+
+    private lazy val watch: Path = {
+      val w = scratch("watch")
+      if (paced) copyTimeOrdered(spark, src, w, scratch("ranges"), minRanges)
+      else copyParquet(Paths.get(src), w)
+      w
+    }
+
+    /** File-source twin of [[graft.Tables.events]]: a new streaming
+      * frame over the watch directory with the same ts normalization,
+      * so both physical testdata layouts work. The schema is the
+      * source table's, resolved through [[graft.Tables]] once per file
+      * set rather than once per gate call.
+      */
+    def events: DataFrame = {
+      val reader = spark.readStream.schema(Tables.eventsRaw(spark, dir).schema)
+      Tables.normalizedTs((if (paced) reader.option("maxFilesPerTrigger", "1")
+        else reader).parquet(watch.toString))
+    }
+
+    /** Max event-time in µs, None on an empty table (the sentinel
+      * walk is skipped then — an empty stream's output is empty with
+      * the correct sink schema, no watermark walking needed).
+      *
+      * The same single pass REQUIRES the sentinel value domain to be
+      * free in the real data (r14 advice): the lifecycle reserves
+      * event_type 'sentinel' (it rides both sides of the left-outer
+      * join filter) and negative event_id/user_id (the output cuts are
+      * `l_id >= 0` / `user_id =!= -1`). A generator change that starts
+      * emitting those values would silently corrupt gate output or
+      * drop real rows while the oracle keeps them — this require turns
+      * that into a loud failure naming the collision.
+      */
+    lazy val maxMicros: Option[Long] = {
+      val row = Tables.events(spark, dir)
+        .agg(max(unix_micros(col("ts"))),
+          sum(when(col("event_type") === "sentinel", 1L).otherwise(0L)),
+          min(col("event_id")), min(col("user_id"))).head()
+      if (row.isNullAt(0)) None
+      else {
+        require(row.getLong(1) == 0L,
+          "stream gate sentinel lifecycle: events table already contains " +
+            "event_type 'sentinel' — the reserved marker would join as real data")
+        require(row.getLong(2) >= 0L,
+          s"stream gate sentinel lifecycle: min(event_id) = ${row.getLong(2)} " +
+            "< 0 collides with the sentinel id domain (output cut l_id >= 0)")
+        require(row.getLong(3) >= 0L,
+          s"stream gate sentinel lifecycle: min(user_id) = ${row.getLong(3)} " +
+            "< 0 collides with the sentinel user domain (output cut user_id <> -1)")
+        Some(row.getLong(0))
+      }
+    }
+
+    /** Start `writer`, run it until no more input is available, then
+      * walk the watermark: for each offset in `sentinelHours`, one
+      * far-future sentinel file (id −1, −2, …, `sentinelHours` past
+      * [[maxMicros]]) lands in the watch directory and the query
+      * drains again, so append-mode output certified by the advanced
+      * watermark is flushed. The query is stopped either way.
+      */
+    def drive(writer: DataStreamWriter[Row],
+        sentinelHours: Seq[Long] = Nil): Unit = {
+      // the sentinel-domain require fires before the query starts
+      val mx = if (sentinelHours.isEmpty) None else maxMicros
+      val q = writer.start()
+      try {
+        q.processAllAvailable()
+        for (m <- mx; (h, i) <- sentinelHours.zipWithIndex) {
+          addSentinel(id = -1L - i, tsMicros = m + h * 3600L * 1000000L)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+    }
+
+    /** Run `df` to completion ([[drive]]) into the sink its output
+      * mode allows, and return the sink's contents, unmaterialized.
+      * Append goes to the PRODUCTION sink, a parquet FILE sink
+      * (distributed, exactly-once via the checkpoint +
+      * _spark_metadata commit log) instead of the memory sink's
+      * driver-side collect — at ×100 the enriched-events gate was
+      * spending 27× its wall materializing 10 M rows on the driver —
+      * read back with the query's schema, so an empty stream reads as
+      * an empty frame. Update and Complete go to the memory sink (the
+      * file sink takes Append only), whose view pins the collected
+      * output on the driver until [[close]] drops it.
+      */
+    def run(df: DataFrame, mode: OutputMode,
+        sentinelHours: Seq[Long] = Nil): DataFrame = {
+      val writer = df.writeStream.outputMode(mode)
+        .option("checkpointLocation", scratch("cp").toString)
+      if (mode == OutputMode.Append) {
+        val out = scratch("out").toString
+        drive(writer.format("parquet").option("path", out), sentinelHours)
+        spark.read.schema(df.schema).parquet(out)
+      } else {
+        val n = s"sg_${tag}_" +
+          java.util.UUID.randomUUID.toString.replace("-", "")
+        views += n
+        drive(writer.format("memory").queryName(n), sentinelHours)
+        spark.table(n)
+      }
+    }
+
+    /** Write a one-row sentinel parquet file, physically matching the
+      * source layout (same raw ts type, full column set) so the fixed
+      * stream schema reads it; lands atomically via staging + move.
+      */
+    private def addSentinel(id: Long, tsMicros: Long): Unit = {
+      val raw = Tables.parquet(spark, src)
+      val tsType = raw.schema("ts").dataType
+      val tsCol = tsType match {
+        case LongType => lit(tsMicros * 1000L) // raw int64 nanos layout
+        case _ => timestamp_micros(lit(tsMicros)).cast(tsType)
+      }
+      val row = raw.limit(1).select(raw.columns.map {
+        case "event_id" => lit(id).as("event_id")
+        case "ts" => tsCol.as("ts")
+        case "user_id" => lit(-1L).as("user_id")
+        case "event_type" => lit("sentinel").as("event_type")
+        case "value" => lit(0.0).as("value")
+        case other => raw(other)
+      }.toSeq: _*)
+      val staging = scratch("sentinel")
+      row.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      val part = Files.list(staging).iterator()
+      var moved = false
+      while (part.hasNext && !moved) {
+        val f = part.next()
+        if (f.getFileName.toString.endsWith(".parquet")) {
+          Files.move(f, watch.resolve(s"sentinel_${-id}.parquet"),
+            StandardCopyOption.ATOMIC_MOVE)
+          moved = true
+        }
+      }
+      require(moved, "sentinel parquet part file not produced")
+    }
+
+    /** Drop the memory-sink views and delete the scratch scope. Every
+      * query is stopped by then ([[drive]]), and the gate's result is
+      * checkpointed, so nothing reads these files any more.
+      */
+    def close(): Unit = {
+      views.foreach(spark.catalog.dropTempView)
+      val it = Files.walk(scope).sorted(java.util.Comparator.reverseOrder())
         .iterator()
       while (it.hasNext) Files.deleteIfExists(it.next())
     }
-
-  /** Max event-time in µs, None on an empty table (the sentinel
-    * lifecycle is skipped then — an empty stream's output is empty
-    * with the correct sink schema, no watermark walking needed).
-    *
-    * The same single pass REQUIRES the sentinel value domain to be
-    * free in the real data (r14 advice): the lifecycle reserves
-    * event_type 'sentinel' (it rides both sides of the left-outer
-    * join filter) and negative event_id/user_id (the output cuts are
-    * `l_id >= 0` / `user_id =!= -1`). A generator change that starts
-    * emitting those values would silently corrupt gate output or
-    * drop real rows while the oracle keeps them — this require turns
-    * that into a loud failure naming the collision.
-    */
-  private def maxEventMicros(spark: SparkSession, dir: String): Option[Long] = {
-    import org.apache.spark.sql.functions.col
-    val row = Tables.events(spark, dir)
-      .agg(max(unix_micros(col("ts"))),
-        sum(when(col("event_type") === "sentinel", 1L).otherwise(0L)),
-        min(col("event_id")), min(col("user_id"))).head()
-    if (row.isNullAt(0)) None
-    else {
-      require(row.getLong(1) == 0L,
-        "stream gate sentinel lifecycle: events table already contains " +
-          "event_type 'sentinel' — the reserved marker would join as real data")
-      require(row.getLong(2) >= 0L,
-        s"stream gate sentinel lifecycle: min(event_id) = ${row.getLong(2)} " +
-          "< 0 collides with the sentinel id domain (output cut l_id >= 0)")
-      require(row.getLong(3) >= 0L,
-        s"stream gate sentinel lifecycle: min(user_id) = ${row.getLong(3)} " +
-          "< 0 collides with the sentinel user domain (output cut user_id <> -1)")
-      Some(row.getLong(0))
-    }
-  }
-
-  /** File-source twin of [[graft.Tables.events]]: the streaming frame
-    * over `path` (a watch directory holding copies of `dir`'s events
-    * files) with the same ts normalization, so both physical testdata
-    * layouts work. The schema is the source table's, resolved through
-    * [[graft.Tables]] once per file set rather than once per gate call.
-    */
-  private def eventsStream(spark: SparkSession, dir: String, path: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader = spark.readStream.schema(Tables.eventsRaw(spark, dir).schema)
-    Tables.normalizedTs(maxFilesPerTrigger
-      .fold(reader)(m => reader.option("maxFilesPerTrigger", m.toString))
-      .parquet(path))
-  }
-
-  /** The file source requires a DIRECTORY; driver testdata ships each
-    * table as a single parquet file, so a single-file table is copied
-    * into a temp watch dir (a directory-shaped table streams as-is).
-    */
-  private def watchDirFor(src: String): (String, Seq[Path]) = {
-    val p = Paths.get(src)
-    if (Files.isDirectory(p)) (src, Nil)
-    else {
-      val watch = Files.createTempDirectory("stream_gate")
-      copyParquet(p, watch)
-      (watch.toString, Seq(watch))
-    }
-  }
-
-  /** Run `q` (a started streaming query) until no more input is
-    * available, then stop — the bounded-input lifecycle every gate
-    * uses.
-    */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    try q.processAllAvailable() finally q.stop()
-
-  /** The PRODUCTION sink for the append-mode gates: a parquet FILE
-    * sink (distributed, exactly-once via the checkpoint +
-    * _spark_metadata commit log) instead of the memory sink's
-    * driver-side collect — at ×100 the enriched-events gate was
-    * spending 27× its wall materializing 10 M rows on the driver.
-    * Returns a started query plus the reader of the committed
-    * output; the caller finishes with [[finishFiles]].
-    */
-  private def parquetSink(df: DataFrame, out: Path, cp: Path) =
-    df.writeStream.format("parquet")
-      .option("path", out.toString)
-      .option("checkpointLocation", cp.toString)
-      .outputMode(OutputMode.Append)
-
-  /** Read the file sink's committed output, materialize, and delete
-    * every temp dir (an empty stream commits no files — return an
-    * empty frame of the right schema).
-    */
-  private def finishFiles(spark: SparkSession, out: Path,
-      schema: org.apache.spark.sql.types.StructType,
-      sort: DataFrame => DataFrame,
-      tempDirs: Seq[Path]): DataFrame = {
-    val hasFiles = Files.exists(out) && {
-      val it = Files.list(out).iterator()
-      var found = false
-      while (it.hasNext && !found) {
-        val nm = it.next().getFileName.toString
-        found = nm.endsWith(".parquet") && !nm.startsWith("_")
-      }
-      found
-    }
-    val result =
-      if (hasFiles) sort(spark.read.parquet(out.toString))
-        .localCheckpoint(true)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    tempDirs.foreach(deleteRecursively)
-    result
   }
 
   /** Gate `stream_enrich_dim`: [[EventStream.enrichWithDim]] over the
@@ -195,25 +246,19 @@ object StreamGates {
     * the StreamingSpec fixture promoted to the board). Stateless, so
     * one drain completes it; the oracle is the plain batch LEFT join.
     */
-  def enrichDimGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val dim = Tables.customer(spark, dir)
-      .select($"c_custkey".as("user_id"),
-        $"c_mktsegment".as("segment"),
-        $"c_nationkey".cast("long").as("nation"))
-      .filter($"user_id" % 7 =!= 0)
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, dir, watch)
-      .select($"event_id", $"user_id")
-    val enriched = EventStream.enrichWithDim(stream, dim, "user_id")
-      .select($"event_id", $"segment", $"nation")
-    val out = Files.createTempDirectory("enrich_out")
-    val cp = Files.createTempDirectory("enrich_cp")
-    drain(parquetSink(enriched, out, cp).start())
-    finishFiles(spark, out, enriched.schema,
-      _.orderBy($"event_id"), tmp ++ Seq(out, cp))
-  }
+  def enrichDimGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "enrich_stream_gate") { g =>
+      import g.spark.implicits._
+      val dim = Tables.customer(g.spark, dir)
+        .select($"c_custkey".as("user_id"),
+          $"c_mktsegment".as("segment"),
+          $"c_nationkey".cast("long").as("nation"))
+        .filter($"user_id" % 7 =!= 0)
+      val stream = g.events.select($"event_id", $"user_id")
+      val enriched = EventStream.enrichWithDim(stream, dim, "user_id")
+        .select($"event_id", $"segment", $"nation")
+      g.run(enriched, OutputMode.Append).orderBy($"event_id")
+    }
 
   val enrichDimGateSql: String =
     """SELECT e.event_id, c.c_mktsegment AS segment,
@@ -232,25 +277,20 @@ object StreamGates {
     * robust to any micro-batch split of the input files. Oracle: the
     * exact per-user batch counts.
     */
-  def heavyHittersGate(spark0: SparkSession, dir: String,
-      parts: Int = 4): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val distinct = Tables.events(spark, dir)
-      .select($"user_id").distinct().count()
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, dir, watch)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[StreamEvent]
-    val n = sinkName("hh")
-    drain(EventStream.heavyHitters(stream, parts, m = distinct.toInt + 8)
-      .writeStream.format("memory").queryName(n)
-      .outputMode(OutputMode.Update).start())
-    finish(spark, n, spark.table(n)
-      .groupBy($"user_id")
-      .agg(max($"est").as("est"), max($"err").as("err"))
-      .orderBy($"user_id"), tmp)
-  }
+  def heavyHittersGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "hh_stream_gate") { g =>
+      import g.spark.implicits._
+      val distinct = Tables.events(g.spark, dir)
+        .select($"user_id").distinct().count()
+      val stream = g.events
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+        .as[StreamEvent]
+      g.run(EventStream.heavyHitters(stream, parts = 4,
+          m = distinct.toInt + 8).toDF(), OutputMode.Update)
+        .groupBy($"user_id")
+        .agg(max($"est").as("est"), max($"err").as("err"))
+        .orderBy($"user_id")
+    }
 
   val heavyHittersGateSql: String =
     """SELECT user_id, CAST(count(*) AS BIGINT) AS est,
@@ -273,41 +313,19 @@ object StreamGates {
     * µs DuckDB ASOF JOIN; this gate gets the ms-floored replay, the
     * same grain split sessionizeGateSql already documents.
     */
-  def asOfGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val src = s"$dir/events.parquet"
-    val watch = Files.createTempDirectory("asof_stream_gate")
-    copyTimeOrdered(spark, src, watch)
-    // far-future sentinel timestamps from the batch frame's max ts;
-    // None on an empty table — no sentinels needed, output is empty
-    val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, dir, watch.toString,
-        maxFilesPerTrigger = Some(1))
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[StreamEvent]
-    val enriched = EventStream.asOfEnrich(stream).toDF()
-    val out = Files.createTempDirectory("asof_out")
-    val cp = Files.createTempDirectory("asof_cp")
-    val q = parquetSink(enriched, out, cp).start()
-    try {
-      q.processAllAvailable()
+  def asOfGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "asof_stream_gate", paced = true) { g =>
+      import g.spark.implicits._
+      val stream = g.events
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+        .as[StreamEvent]
       // two sentinel batches: the first advances the watermark past
       // every real event, the second triggers the flush of probes
       // the first certified (watermark updates between triggers)
-      maxMicros.foreach { mx =>
-        addSentinel(spark, src, watch, id = -1L,
-          tsMicros = mx + 40L * 3600 * 1000000L)
-        q.processAllAvailable()
-        addSentinel(spark, src, watch, id = -2L,
-          tsMicros = mx + 80L * 3600 * 1000000L)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    finishFiles(spark, out, enriched.schema,
-      _.filter($"user_id" =!= -1L).orderBy($"event_id"),
-      Seq(watch, out, cp))
-  }
+      g.run(EventStream.asOfEnrich(stream).toDF(), OutputMode.Append,
+          sentinelHours = Seq(40L, 80L))
+        .filter($"user_id" =!= -1L).orderBy($"event_id")
+    }
 
   /** The ms-grain oracle for [[asOfGate]]: each non-signup probe
     * matched to the latest same-user signup whose MILLISECOND floor
@@ -346,18 +364,13 @@ object StreamGates {
     * sentinel lifecycle is needed; a bounded replay has no late data
     * for the watermark to drop. Oracle: the batch hourly aggregate.
     */
-  def hourlyRollupGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, dir, watch)
-      .select($"ts", $"event_type", $"value")
-    val n = sinkName("hrollup")
-    drain(EventStream.hourlyRollup(stream)
-      .writeStream.format("memory").queryName(n)
-      .outputMode(OutputMode.Complete).start())
-    finish(spark, n, spark.table(n).orderBy($"hour", $"event_type"), tmp)
-  }
+  def hourlyRollupGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "hrollup_stream_gate") { g =>
+      import g.spark.implicits._
+      val stream = g.events.select($"ts", $"event_type", $"value")
+      g.run(EventStream.hourlyRollup(stream), OutputMode.Complete)
+        .orderBy($"hour", $"event_type")
+    }
 
   val hourlyRollupGateSql: String =
     """SELECT date_trunc('hour', ts) AS hour, event_type,
@@ -369,18 +382,13 @@ object StreamGates {
     * (SURVEY 40b, 3 h windows every 1 h) in complete mode. Oracle:
     * each event fans into the 3 epoch-aligned windows containing it.
     */
-  def slidingRollupGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, dir, watch)
-      .select($"ts", $"value")
-    val n = sinkName("srollup")
-    drain(EventStream.slidingRollup(stream)
-      .writeStream.format("memory").queryName(n)
-      .outputMode(OutputMode.Complete).start())
-    finish(spark, n, spark.table(n).orderBy($"win_start"), tmp)
-  }
+  def slidingRollupGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "srollup_stream_gate") { g =>
+      import g.spark.implicits._
+      val stream = g.events.select($"ts", $"value")
+      g.run(EventStream.slidingRollup(stream), OutputMode.Complete)
+        .orderBy($"win_start")
+    }
 
   val slidingRollupGateSql: String =
     """WITH ev AS (
@@ -401,33 +409,16 @@ object StreamGates {
     * by the win_start bound. Oracle: the 24-window fan-out +
     * count(DISTINCT).
     */
-  def slidingDauGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val src = s"$dir/events.parquet"
-    val watch = Files.createTempDirectory("sdau_stream_gate")
-    copyTimeOrdered(spark, src, watch)
-    val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, dir, watch.toString,
-        maxFilesPerTrigger = Some(1))
-      .select($"ts", $"user_id")
-    val dau = EventStream.slidingDau(stream)
-    val out = Files.createTempDirectory("sdau_out")
-    val cp = Files.createTempDirectory("sdau_cp")
-    val q = parquetSink(dau, out, cp).start()
-    try {
-      q.processAllAvailable()
-      maxMicros.foreach { mx =>
-        addSentinel(spark, src, watch, id = -1L,
-          tsMicros = mx + 40L * 3600 * 1000000L)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    finishFiles(spark, out, dau.schema,
-      _.filter($"win_start" <= timestamp_micros(lit(maxMicros.getOrElse(0L))))
-        .orderBy($"win_start"),
-      Seq(watch, out, cp))
-  }
+  def slidingDauGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "sdau_stream_gate", paced = true) { g =>
+      import g.spark.implicits._
+      val stream = g.events.select($"ts", $"user_id")
+      g.run(EventStream.slidingDau(stream), OutputMode.Append,
+          sentinelHours = Seq(40L))
+        .filter($"win_start" <=
+          timestamp_micros(lit(g.maxMicros.getOrElse(0L))))
+        .orderBy($"win_start")
+    }
 
   val slidingDauGateSql: String =
     """WITH ev AS (
@@ -465,57 +456,38 @@ object StreamGates {
     * only Spark can compute it — hence the envelope verdict, not the
     * raw estimate, is the compared surface.
     */
-  def slidingDauHllGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val src = s"$dir/events.parquet"
-    val watch = Files.createTempDirectory("sdauhll_stream_gate")
-    copyTimeOrdered(spark, src, watch)
-    val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, dir, watch.toString,
-        maxFilesPerTrigger = Some(1))
-      .select($"ts", $"user_id")
-    val est = EventStream.slidingDauHll(stream)
-    val out = Files.createTempDirectory("sdauhll_out")
-    val cp = Files.createTempDirectory("sdauhll_cp")
-    val q = parquetSink(est, out, cp).start()
-    try {
-      q.processAllAvailable()
-      maxMicros.foreach { mx =>
-        addSentinel(spark, src, watch, id = -1L,
-          tsMicros = mx + 40L * 3600 * 1000000L)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = finishFiles(spark, out, est.schema, identity,
-      Seq(watch, out, cp))
-    // the in-gate exact twin rides dropDuplicates + count, not
-    // countDistinct: the map-side partial dedup collapses the 24×
-    // fan-out before the exchange, where countDistinct's expand-based
-    // two-phase distinct shuffles the full pair frame (measured 8×
-    // slower at ×10 — the gate's own oracle must not dominate the
-    // valve it verifies). Additionally reduced to the distinct
-    // (hour, user) frame FIRST: cross-hour repeat activity never
-    // enters the fan-out.
-    val exact = Tables.events(spark, dir)
-      .select(floor(unix_micros($"ts") / lit(3600000000L)).cast(LongType)
-        .as("h"), $"user_id")
-      .dropDuplicates("h", "user_id")
-      .select(explode(sequence($"h" - 23, $"h")).as("ws"), $"user_id")
-      .dropDuplicates("ws", "user_id")
-      .groupBy($"ws")
-      .agg(count(lit(1)).as("users_24h"))
-      .select(timestamp_micros($"ws" * 3600000000L).as("win_start"),
-        $"users_24h")
-    exact
-      .join(streamed, Seq("win_start"), "left")
-      .select($"win_start", $"users_24h",
-        ($"users_est".isNotNull &&
-          abs($"users_est" - $"users_24h") <=
-            greatest($"users_24h" * lit(0.12), lit(2.0))).as("est_ok"))
-      .orderBy($"win_start")
-      .localCheckpoint(true)
-  }
+  def slidingDauHllGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "sdauhll_stream_gate", paced = true) { g =>
+      import g.spark.implicits._
+      val stream = g.events.select($"ts", $"user_id")
+      val streamed = g.run(EventStream.slidingDauHll(stream),
+        OutputMode.Append, sentinelHours = Seq(40L))
+      // the in-gate exact twin rides dropDuplicates + count, not
+      // countDistinct: the map-side partial dedup collapses the 24×
+      // fan-out before the exchange, where countDistinct's expand-based
+      // two-phase distinct shuffles the full pair frame (measured 8×
+      // slower at ×10 — the gate's own oracle must not dominate the
+      // valve it verifies). Additionally reduced to the distinct
+      // (hour, user) frame FIRST: cross-hour repeat activity never
+      // enters the fan-out.
+      val exact = Tables.events(g.spark, dir)
+        .select(floor(unix_micros($"ts") / lit(3600000000L)).cast(LongType)
+          .as("h"), $"user_id")
+        .dropDuplicates("h", "user_id")
+        .select(explode(sequence($"h" - 23, $"h")).as("ws"), $"user_id")
+        .dropDuplicates("ws", "user_id")
+        .groupBy($"ws")
+        .agg(count(lit(1)).as("users_24h"))
+        .select(timestamp_micros($"ws" * 3600000000L).as("win_start"),
+          $"users_24h")
+      exact
+        .join(streamed, Seq("win_start"), "left")
+        .select($"win_start", $"users_24h",
+          ($"users_est".isNotNull &&
+            abs($"users_est" - $"users_24h") <=
+              greatest($"users_24h" * lit(0.12), lit(2.0))).as("est_ok"))
+        .orderBy($"win_start")
+    }
 
   val slidingDauHllGateSql: String =
     """WITH ev AS (
@@ -538,36 +510,16 @@ object StreamGates {
     * 1000 arithmetic, ms-floored boundaries re-expanded to µs
     * timestamps.
     */
-  def sessionizeGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val src = s"$dir/events.parquet"
-    val watch = Files.createTempDirectory("sess_stream_gate")
-    copyTimeOrdered(spark, src, watch)
-    val maxMicros = maxEventMicros(spark, dir)
-    val stream = eventsStream(spark, dir, watch.toString,
-        maxFilesPerTrigger = Some(1))
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[StreamEvent]
-    val sessions = EventStream.sessionize(stream).toDF()
-    val out = Files.createTempDirectory("sess_out")
-    val cp = Files.createTempDirectory("sess_cp")
-    val q = parquetSink(sessions, out, cp).start()
-    try {
-      q.processAllAvailable()
-      maxMicros.foreach { mx =>
-        addSentinel(spark, src, watch, id = -1L,
-          tsMicros = mx + 10L * 3600 * 1000000L)
-        q.processAllAvailable()
-        addSentinel(spark, src, watch, id = -2L,
-          tsMicros = mx + 20L * 3600 * 1000000L)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    finishFiles(spark, out, sessions.schema,
-      _.filter($"user_id" =!= -1L).orderBy($"user_id", $"session_start"),
-      Seq(watch, out, cp))
-  }
+  def sessionizeGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "sess_stream_gate", paced = true) { g =>
+      import g.spark.implicits._
+      val stream = g.events
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+        .as[StreamEvent]
+      g.run(EventStream.sessionize(stream).toDF(), OutputMode.Append,
+          sentinelHours = Seq(10L, 20L))
+        .filter($"user_id" =!= -1L).orderBy($"user_id", $"session_start")
+    }
 
   val sessionizeGateSql: String =
     """WITH e AS (
@@ -594,18 +546,13 @@ object StreamGates {
     * complete mode; oracle is the epoch-anchored DFT, whose phase
     * needs no series start — the property that makes it streamable.
     */
-  def periodogramGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, dir, watch)
-      .select($"ts")
-    val n = sinkName("pgram")
-    drain(EventStream.periodogram(stream)
-      .writeStream.format("memory").queryName(n)
-      .outputMode(OutputMode.Complete).start())
-    finish(spark, n, spark.table(n).orderBy($"period"), tmp)
-  }
+  def periodogramGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "pgram_stream_gate") { g =>
+      import g.spark.implicits._
+      g.run(EventStream.periodogram(g.events.select($"ts")),
+          OutputMode.Complete)
+        .orderBy($"period")
+    }
 
   val periodogramGateSql: String =
     graft.operators.Events.periodogramEpochSql
@@ -617,20 +564,16 @@ object StreamGates {
     * drain completes the bounded replay; the watermarks exist for
     * state eviction, not emission. Oracle: the plain interval join.
     */
-  def joinIntervalGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    def side(t: String) = eventsStream(spark, dir, watch)
-      .filter($"event_type" === t)
-      .select($"event_id", $"user_id", $"ts")
-    val joined = EventStream.streamStreamJoin(side("click"), side("error"))
-    val out = Files.createTempDirectory("ssj_out")
-    val cp = Files.createTempDirectory("ssj_cp")
-    drain(parquetSink(joined, out, cp).start())
-    finishFiles(spark, out, joined.schema,
-      _.orderBy($"l_id", $"r_id"), tmp ++ Seq(out, cp))
-  }
+  def joinIntervalGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "ssj_stream_gate") { g =>
+      import g.spark.implicits._
+      def side(t: String) = g.events
+        .filter($"event_type" === t)
+        .select($"event_id", $"user_id", $"ts")
+      g.run(EventStream.streamStreamJoin(side("click"), side("error")),
+          OutputMode.Append)
+        .orderBy($"l_id", $"r_id")
+    }
 
   val joinIntervalGateSql: String =
     """WITH ev AS (SELECT event_id, user_id,
@@ -651,36 +594,16 @@ object StreamGates {
     * click's window; sentinel rows ride both sides (their
     * event_type passes both filters) and are cut by the l_id bound.
     */
-  def joinLeftOuterGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val src = s"$dir/events.parquet"
-    val watch = Files.createTempDirectory("ssj_outer_gate")
-    copyParquet(Paths.get(src), watch)
-    val maxMicros = maxEventMicros(spark, dir)
-    def side(t: String) = eventsStream(spark, dir, watch.toString)
-      .filter($"event_type".isin(t, "sentinel"))
-      .select($"event_id", $"user_id", $"ts")
-    val joined = EventStream.streamStreamJoinLeftOuter(
-      side("click"), side("error"))
-    val out = Files.createTempDirectory("ssjo_out")
-    val cp = Files.createTempDirectory("ssjo_cp")
-    val q = parquetSink(joined, out, cp).start()
-    try {
-      q.processAllAvailable()
-      maxMicros.foreach { mx =>
-        addSentinel(spark, src, watch, id = -1L,
-          tsMicros = mx + 10L * 3600 * 1000000L)
-        q.processAllAvailable()
-        addSentinel(spark, src, watch, id = -2L,
-          tsMicros = mx + 20L * 3600 * 1000000L)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    finishFiles(spark, out, joined.schema,
-      _.filter($"l_id" >= 0L).orderBy($"l_id", $"r_id"),
-      Seq(watch, out, cp))
-  }
+  def joinLeftOuterGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "ssj_outer_gate") { g =>
+      import g.spark.implicits._
+      def side(t: String) = g.events
+        .filter($"event_type".isin(t, "sentinel"))
+        .select($"event_id", $"user_id", $"ts")
+      g.run(EventStream.streamStreamJoinLeftOuter(side("click"), side("error")),
+          OutputMode.Append, sentinelHours = Seq(10L, 20L))
+        .filter($"l_id" >= 0L).orderBy($"l_id", $"r_id")
+    }
 
   val joinLeftOuterGateSql: String =
     """WITH ev AS (SELECT event_id, user_id,
@@ -715,43 +638,34 @@ object StreamGates {
     *    heavy-hitters gate's device), so the oracle gains a real
     *    min() column that is exact under any micro-batch split.
     */
-  def dedupGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, dir, watch)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    val deduped = EventStream
-      .dedupByKey(stream, Seq("user_id", "event_type"))
-    val out = Files.createTempDirectory("dedup_out")
-    val cp = Files.createTempDirectory("dedup_cp")
-    drain(parquetSink(deduped, out, cp).start())
-    // second live query: per-key min(event_id), stateful streaming
-    // aggregation in update mode; consumer-side min collapses
-    // re-emissions deterministically
-    val n = sinkName("dedupmin")
-    drain(eventsStream(spark, dir, watch)
-      .select($"user_id", $"event_type", $"event_id")
-      .groupBy($"user_id", $"event_type")
-      .agg(min($"event_id").as("min_event_id"))
-      .writeStream.format("memory").queryName(n)
-      .outputMode(OutputMode.Update).start())
-    val mins = spark.table(n).groupBy($"user_id", $"event_type")
-      .agg(min($"min_event_id").as("min_event_id"))
-    val survivors = finishFiles(spark, out, deduped.schema, identity, Nil)
-    val batchRows = Tables.events(spark, dir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .withColumn("__in", lit(1L))
-    val checked = survivors
-      .join(batchRows,
-        Seq("event_id", "ts", "user_id", "event_type", "value"), "left")
-      .select($"user_id", $"event_type", $"__in".isNotNull.as("payload_ok"))
-    finish(spark, n,
-      checked.join(mins, Seq("user_id", "event_type"), "left")
+  def dedupGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "dedup_stream_gate") { g =>
+      import g.spark.implicits._
+      val stream = g.events
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+      val survivors = g.run(
+        EventStream.dedupByKey(stream, Seq("user_id", "event_type")),
+        OutputMode.Append)
+      // second live query: per-key min(event_id), stateful streaming
+      // aggregation in update mode; consumer-side min collapses
+      // re-emissions deterministically
+      val mins = g.run(g.events
+          .select($"user_id", $"event_type", $"event_id")
+          .groupBy($"user_id", $"event_type")
+          .agg(min($"event_id").as("min_event_id")), OutputMode.Update)
+        .groupBy($"user_id", $"event_type")
+        .agg(min($"min_event_id").as("min_event_id"))
+      val batchRows = Tables.events(g.spark, dir)
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+        .withColumn("__in", lit(1L))
+      survivors
+        .join(batchRows,
+          Seq("event_id", "ts", "user_id", "event_type", "value"), "left")
+        .select($"user_id", $"event_type", $"__in".isNotNull.as("payload_ok"))
+        .join(mins, Seq("user_id", "event_type"), "left")
         .select($"user_id", $"event_type", $"min_event_id", $"payload_ok")
-        .orderBy($"user_id", $"event_type"),
-      tmp ++ Seq(out, cp))
-  }
+        .orderBy($"user_id", $"event_type")
+    }
 
   val dedupGateSql: String =
     """SELECT user_id, event_type,
@@ -772,25 +686,22 @@ object StreamGates {
     * (Timestamp.getTime ordering) is replayed by the oracle's
     * epoch_us // 1000 ordering.
     */
-  def cusumGate(spark0: SparkSession, dir: String, target: Double = 1.0,
-      slack: Double = 0.5, threshold: Double = 25.0): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val (watch, tmp) = watchDirFor(s"$dir/events.parquet")
-    val stream = eventsStream(spark, dir, watch)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[StreamEvent]
-    val alarms = EventStream
-      .cusumControl(stream, target, slack, threshold).toDF()
-    val out = Files.createTempDirectory("cusum_out")
-    val cp = Files.createTempDirectory("cusum_cp")
-    drain(parquetSink(alarms, out, cp).start())
-    finishFiles(spark, out, alarms.schema,
-      _.orderBy($"event_type", $"event_id"), tmp ++ Seq(out, cp))
-  }
+  private val CusumTarget = 1.0
+  private val CusumSlack = 0.5
+  private val CusumThreshold = 25.0
 
-  def cusumGateSql(target: Double = 1.0, slack: Double = 0.5,
-      threshold: Double = 25.0): String =
+  def cusumGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "cusum_stream_gate") { g =>
+      import g.spark.implicits._
+      val stream = g.events
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+        .as[StreamEvent]
+      g.run(EventStream.cusumControl(stream, CusumTarget, CusumSlack,
+          CusumThreshold).toDF(), OutputMode.Append)
+        .orderBy($"event_type", $"event_id")
+    }
+
+  val cusumGateSql: String =
     s"""WITH RECURSIVE e AS (
           SELECT event_type AS series, event_id,
                  date_trunc('microseconds', ts) AS ts, value,
@@ -804,18 +715,18 @@ object StreamGates {
           UNION ALL
           SELECT e.series, e.rn,
                  CASE WHEN greatest(CAST(0.0 AS DOUBLE),
-                             rec.s + ((e.value - $target) - $slack))
-                           > $threshold THEN CAST(0.0 AS DOUBLE)
+                             rec.s + ((e.value - $CusumTarget) - $CusumSlack))
+                           > $CusumThreshold THEN CAST(0.0 AS DOUBLE)
                       ELSE greatest(CAST(0.0 AS DOUBLE),
-                             rec.s + ((e.value - $target) - $slack)) END
+                             rec.s + ((e.value - $CusumTarget) - $CusumSlack)) END
           FROM rec JOIN e ON e.series = rec.series AND e.rn = rec.rn + 1),
         alarms AS (
           SELECT e.series AS event_type, e.event_id, e.ts,
                  greatest(CAST(0.0 AS DOUBLE),
-                   rec.s + ((e.value - $target) - $slack)) AS s_plus
+                   rec.s + ((e.value - $CusumTarget) - $CusumSlack)) AS s_plus
           FROM rec JOIN e ON e.series = rec.series AND e.rn = rec.rn + 1
           WHERE greatest(CAST(0.0 AS DOUBLE),
-                  rec.s + ((e.value - $target) - $slack)) > $threshold)
+                  rec.s + ((e.value - $CusumTarget) - $CusumSlack)) > $CusumThreshold)
         SELECT event_type, event_id, ts, s_plus
         FROM alarms ORDER BY event_type, event_id"""
 
@@ -836,46 +747,39 @@ object StreamGates {
     * so only the newest batch can legally replay) and asserts the
     * version did not move — `replay_idempotent` on every row.
     */
-  def intoManifestGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val src = s"$dir/events.parquet"
-    val watch = Files.createTempDirectory("manifest_stream_gate")
-    copyTimeOrdered(spark, src, watch, minRanges = 4)
-    val root = Files.createTempDirectory("manifest_stream_tbl")
-    val cp = Files.createTempDirectory("manifest_stream_cp")
-    val table = new graft.pipeline.ManifestTable(spark,
-      root.resolve("t").toString)
-    val stream = eventsStream(spark, dir, watch.toString,
-        maxFilesPerTrigger = Some(1))
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-    drain(EventStream.intoManifestTable(stream, table, cp.toString).start())
-    val result = table.currentVersion match {
-      case None => // empty source: nothing committed, empty output
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(stream.schema.fields ++ Seq(
-            org.apache.spark.sql.types.StructField("multi_commit",
-              org.apache.spark.sql.types.BooleanType),
-            org.apache.spark.sql.types.StructField("replay_idempotent",
-              org.apache.spark.sql.types.BooleanType))))
-      case Some(v) =>
-        val replayOk = table.liveBatchId.exists { id =>
-          table.append(Tables.events(spark, dir).limit(1)
-            .select($"event_id", $"ts", $"user_id", $"event_type", $"value"),
-            Some(id))
-          table.currentVersion.contains(v)
-        }
-        table.read()
-          .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-          .withColumn("multi_commit", lit(table.history.size >= 2))
-          .withColumn("replay_idempotent", lit(replayOk))
-          .orderBy($"event_id")
-          .localCheckpoint(true)
+  def intoManifestGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "manifest_stream_gate", paced = true,
+        minRanges = 4) { g =>
+      import g.spark.implicits._
+      val table = new graft.pipeline.ManifestTable(g.spark,
+        g.scratch("tbl").resolve("t").toString)
+      val stream = g.events
+        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+      g.drive(EventStream.intoManifestTable(stream, table,
+        g.scratch("cp").toString))
+      table.currentVersion match {
+        case None => // empty source: nothing committed, empty output
+          g.spark.createDataFrame(
+            g.spark.sparkContext.emptyRDD[Row],
+            org.apache.spark.sql.types.StructType(stream.schema.fields ++ Seq(
+              org.apache.spark.sql.types.StructField("multi_commit",
+                org.apache.spark.sql.types.BooleanType),
+              org.apache.spark.sql.types.StructField("replay_idempotent",
+                org.apache.spark.sql.types.BooleanType))))
+        case Some(v) =>
+          val replayOk = table.liveBatchId.exists { id =>
+            table.append(Tables.events(g.spark, dir).limit(1)
+              .select($"event_id", $"ts", $"user_id", $"event_type", $"value"),
+              Some(id))
+            table.currentVersion.contains(v)
+          }
+          table.read()
+            .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+            .withColumn("multi_commit", lit(table.history.size >= 2))
+            .withColumn("replay_idempotent", lit(replayOk))
+            .orderBy($"event_id")
+      }
     }
-    Seq(watch, root, cp).foreach(deleteRecursively)
-    result
-  }
 
   /** Gate `stream_mv_loop`: the streaming→lakehouse→MV maintenance
     * loop ([[EventStream.intoMaintainedTable]], SURVEY's
@@ -891,42 +795,34 @@ object StreamGates {
     * the result. Exact sums ride an integer-cents column derived
     * before commit, so the fold order can't smear doubles.
     */
-  def mvLoopGate(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = streamSession(spark0)
-    import spark.implicits._
-    val src = s"$dir/events.parquet"
-    val watch = Files.createTempDirectory("mv_loop_gate")
-    copyTimeOrdered(spark, src, watch, minRanges = 4)
-    val root = Files.createTempDirectory("mv_loop_tbl")
-    val cp = Files.createTempDirectory("mv_loop_cp")
-    val table = new graft.pipeline.ManifestTable(spark,
-      root.resolve("t").toString)
-    val mv = new graft.pipeline.MaterializedAgg(table,
-      new graft.pipeline.ManifestTable(spark, root.resolve("mv").toString),
-      groupCols = Seq("event_type"), sumCols = Seq("cents"))
-    val modes = scala.collection.mutable.ArrayBuffer.empty[String]
-    val stream = eventsStream(spark, dir, watch.toString,
-        maxFilesPerTrigger = Some(1))
-      .select($"event_id", $"ts", $"user_id", $"event_type",
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-    drain(EventStream.intoMaintainedTable(stream, table, mv, cp.toString,
-      modes).start())
-    require(modes.nonEmpty, "stream_mv_loop: no micro-batch ever committed")
-    require(modes.head == "full",
-      s"stream_mv_loop: first refresh must build (got ${modes.head})")
-    val later = modes.tail.filterNot(_ == "noop") // empty batches may noop
-    require(later.nonEmpty && later.forall(_ == "delta"),
-      s"stream_mv_loop: later refreshes must be incremental (got $modes)")
-    val result = mv.read()
-      .select($"event_type", $"n_rows".as("n_events"),
-        $"sum_cents".as("cents_sum"))
-      .withColumn("first_full", lit(true))
-      .withColumn("incremental_after", lit(true))
-      .orderBy($"event_type")
-      .localCheckpoint(true)
-    Seq(watch, root, cp).foreach(deleteRecursively)
-    result
-  }
+  def mvLoopGate(spark0: SparkSession, dir: String): DataFrame =
+    streamGate(spark0, dir, "mv_loop_gate", paced = true, minRanges = 4) { g =>
+      import g.spark.implicits._
+      val root = g.scratch("tbl")
+      val table = new graft.pipeline.ManifestTable(g.spark,
+        root.resolve("t").toString)
+      val mv = new graft.pipeline.MaterializedAgg(table,
+        new graft.pipeline.ManifestTable(g.spark, root.resolve("mv").toString),
+        groupCols = Seq("event_type"), sumCols = Seq("cents"))
+      val modes = scala.collection.mutable.ArrayBuffer.empty[String]
+      val stream = g.events
+        .select($"event_id", $"ts", $"user_id", $"event_type",
+          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+      g.drive(EventStream.intoMaintainedTable(stream, table, mv,
+        g.scratch("cp").toString, modes))
+      require(modes.nonEmpty, "stream_mv_loop: no micro-batch ever committed")
+      require(modes.head == "full",
+        s"stream_mv_loop: first refresh must build (got ${modes.head})")
+      val later = modes.tail.filterNot(_ == "noop") // empty batches may noop
+      require(later.nonEmpty && later.forall(_ == "delta"),
+        s"stream_mv_loop: later refreshes must be incremental (got $modes)")
+      mv.read()
+        .select($"event_type", $"n_rows".as("n_events"),
+          $"sum_cents".as("cents_sum"))
+        .withColumn("first_full", lit(true))
+        .withColumn("incremental_after", lit(true))
+        .orderBy($"event_type")
+    }
 
   val mvLoopGateSql: String =
     """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
@@ -952,10 +848,11 @@ object StreamGates {
     * is exactly the OOM the ×100 receipt run hit). Ranges are
     * time-disjoint, so no row is ever late — the equivalence
     * contract is unchanged (StreamingSpec's chunked-replay cases are
-    * the same shape).
+    * the same shape). `staging`, the rewrite's output directory, is
+    * asked for only when the table is rewritten.
     */
   private def copyTimeOrdered(spark: SparkSession, src: String,
-      watch: Path, minRanges: Int = 1): Unit = {
+      watch: Path, staging: => Path, minRanges: Int): Unit = {
     // size-adaptive: the range count exists to bound in-flight STATE,
     // so it tracks bytes — one 32 MB range per step, capped at 32.
     // A table small enough for one range takes the raw-copy fast
@@ -993,12 +890,12 @@ object StreamGates {
       (bytes + (32L << 20) - 1) / (32L << 20))).toInt
     if (ranges == 1 && dataFiles <= 1) { copyParquet(srcPath, watch); return }
     val raw = Tables.parquet(spark, src)
-    val staging = Files.createTempDirectory("stream_ranges")
+    val stage = staging
     // range partition ids are ascending in ts; part file names are
     // ascending in partition id — rename preserves the order
     raw.repartitionByRange(ranges, org.apache.spark.sql.functions.col("ts"))
-      .write.mode("overwrite").parquet(staging.toString)
-    val parts = Files.list(staging).iterator()
+      .write.mode("overwrite").parquet(stage.toString)
+    val parts = Files.list(stage).iterator()
     val names = scala.collection.mutable.ArrayBuffer.empty[Path]
     while (parts.hasNext) {
       val f = parts.next()
@@ -1015,7 +912,6 @@ object StreamGates {
         java.nio.file.attribute.FileTime.fromMillis(
           base.toMillis + i * 1000L))
     }
-    deleteRecursively(staging)
   }
 
   /** Copy a parquet table (single file or directory of part files)
@@ -1039,40 +935,5 @@ object StreamGates {
       Files.copy(src, watch.resolve("input_00000.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-  }
-
-  /** Write a one-row sentinel parquet file, physically matching the
-    * source layout (same raw ts type, full column set) so the fixed
-    * stream schema reads it; lands atomically via staging + move.
-    */
-  private def addSentinel(spark: SparkSession, srcPath: String,
-      watch: Path, id: Long, tsMicros: Long): Unit = {
-    val raw = Tables.parquet(spark, srcPath)
-    val tsType = raw.schema("ts").dataType
-    val tsCol = tsType match {
-      case LongType => lit(tsMicros * 1000L) // raw int64 nanos layout
-      case _ => timestamp_micros(lit(tsMicros)).cast(tsType)
-    }
-    val row = raw.limit(1).select(raw.columns.map {
-      case "event_id" => lit(id).as("event_id")
-      case "ts" => tsCol.as("ts")
-      case "user_id" => lit(-1L).as("user_id")
-      case "event_type" => lit("sentinel").as("event_type")
-      case "value" => lit(0.0).as("value")
-      case other => raw(other)
-    }.toSeq: _*)
-    val staging = Files.createTempDirectory("asof_sentinel")
-    row.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val part = Files.list(staging).iterator()
-    var moved = false
-    while (part.hasNext && !moved) {
-      val f = part.next()
-      if (f.getFileName.toString.endsWith(".parquet")) {
-        Files.move(f, watch.resolve(s"sentinel_${seq.incrementAndGet()}.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-        moved = true
-      }
-    }
-    require(moved, "sentinel parquet part file not produced")
   }
 }

@@ -12,6 +12,18 @@ class StreamingSpec extends SparkSpec {
   private def ts(minutes: Long): Timestamp =
     new Timestamp(1704067200000L + minutes * 60000L) // 2024-01-01 00:00 UTC
 
+  /** Names of the entries under java.io.tmpdir starting with `prefix`. */
+  private def tmpDirsNamed(prefix: String): Set[String] = {
+    val it = java.nio.file.Files.list(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))).iterator()
+    var names = Set.empty[String]
+    while (it.hasNext) {
+      val nm = it.next().getFileName.toString
+      if (nm.startsWith(prefix)) names += nm
+    }
+    names
+  }
+
   test("streaming hourly rollup ≡ batch hourly rollup (complete mode)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -778,22 +790,59 @@ class StreamingSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       dir
     }
+    // a refused gate must still delete its scratch directories: none
+    // named after the gate may appear under java.io.tmpdir
+    def refused(prefix: String)(gate: => Any): IllegalArgumentException = {
+      val before = tmpDirsNamed(prefix)
+      val e = intercept[IllegalArgumentException](gate)
+      val left = tmpDirsNamed(prefix) -- before
+      assert(left.isEmpty, s"refused gate left scratch directories $left")
+      e
+    }
     // event_type 'sentinel' in real data would ride the left-outer
     // join's isin(t, "sentinel") filter as a real row
     val d1 = poisonedDir(_.withColumn("event_type", lit("sentinel")))
-    val e1 = intercept[IllegalArgumentException](
+    val e1 = refused("asof_stream_gate")(
       graft.streaming.StreamGates.asOfGate(spark, d1))
     assert(e1.getMessage.contains("sentinel"), e1.getMessage)
     // negative event_id collides with the l_id >= 0 output cut
     val d2 = poisonedDir(_.withColumn("event_id", lit(-5L)))
-    val e2 = intercept[IllegalArgumentException](
+    val e2 = refused("ssj_outer_gate")(
       graft.streaming.StreamGates.joinLeftOuterGate(spark, d2))
     assert(e2.getMessage.contains("event_id"), e2.getMessage)
     // negative user_id collides with the user_id <> -1 cut
     val d3 = poisonedDir(_.withColumn("user_id", lit(-1L)))
-    val e3 = intercept[IllegalArgumentException](
+    val e3 = refused("sess_stream_gate")(
       graft.streaming.StreamGates.sessionizeGate(spark, d3))
     assert(e3.getMessage.contains("user_id"), e3.getMessage)
+  }
+
+  test("stream gates turn an empty events table into an empty result of the gate's schema") {
+    val dir = java.nio.file.Files.createTempDirectory("empty_events").toString
+    Tables.events(spark, SF).limit(0)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    // a paced file-sink gate (sentinel walk skipped) and an unpaced one
+    val asOf = graft.streaming.StreamGates.asOfGate(spark, dir)
+    assert(asOf.count() == 0L)
+    assert(asOf.columns.toSeq ==
+      Seq("event_id", "user_id", "asof_signup_id", "asof_signup_value"))
+    val cusum = graft.streaming.StreamGates.cusumGate(spark, dir)
+    assert(cusum.count() == 0L)
+    assert(cusum.columns.toSeq == Seq("event_type", "event_id", "ts", "s_plus"))
+  }
+
+  test("a stream gate leaves only its result's checkpoint persisted, and no scratch directory") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val dirsBefore = tmpDirsNamed("dedup_stream_gate")
+    val out = graft.streaming.StreamGates.dedupGate(spark, SF)
+    val held = sc.getPersistentRDDs.keySet.toSet -- before
+    try {
+      assert(held.size == 1, s"dedupGate left ${held.size} persisted RDDs")
+      assert(out.count() > 0L)
+      assert((tmpDirsNamed("dedup_stream_gate") -- dirsBefore).isEmpty)
+    } finally held.foreach(id =>
+      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
   }
 
   test("crash recovery: intoManifestTable stays effectively-once across restart AND a forced batch replay") {
